@@ -25,14 +25,10 @@ from pyspark_cdc_engine.operators import REGISTRY  # noqa: E402
 from pyspark_cdc_engine.session import get_spark  # noqa: E402
 
 
-def bench_cdc_pipeline(spark, n_tx: int, impl: str = "v1") -> dict:
+def bench_cdc_pipeline(spark, n_tx: int) -> dict:
     """End-to-end CDC throughput (BASELINE.md M6 protocol): file-source GG
     events -> stateful assembly -> SCD2 deltalite, then the SCD1 merge; events/s
-    and tx/s for stage 1, wall sec for the stage-2 MERGE.
-
-    ``impl`` (env ``BENCH_CDC_IMPL``): "v1" = applyInPandasWithState (the
-    BASELINE.md-comparable default), "v2" = transformWithStateInPandas
-    (ListState buffers; runs everywhere via the minipb wire codec)."""
+    and tx/s for stage 1, wall sec for the stage-2 MERGE."""
     import shutil
     import tempfile
 
@@ -61,7 +57,6 @@ def bench_cdc_pipeline(spark, n_tx: int, impl: str = "v1") -> dict:
         t0 = time.perf_counter()
         q = cdc_to_scd2_stream(
             spark, str(base / "cdc"), str(base / "meta"), scd2, str(base / "ckpt"),
-            impl=impl,
         )
         q.awaitTermination(600)
         scd2_sec = time.perf_counter() - t0
@@ -74,7 +69,7 @@ def bench_cdc_pipeline(spark, n_tx: int, impl: str = "v1") -> dict:
         t0 = time.perf_counter()
         qw = cdc_to_scd2_stream(
             spark, str(base / "cdc"), str(base / "meta"), scd2w,
-            str(base / "ckpt_warm"), impl=impl,
+            str(base / "ckpt_warm"),
         )
         qw.awaitTermination(600)
         warm_sec = time.perf_counter() - t0
@@ -597,31 +592,11 @@ def main() -> None:
     ):
         try:
             cdc_tx = int(os.environ.get("BENCH_CDC_TX", "2000"))
-            cdc_impl = os.environ.get("BENCH_CDC_IMPL", "v1")
-            _run_cdc = lambda: bench_cdc_pipeline(  # noqa: E731
-                spark, n_tx=cdc_tx, impl=cdc_impl,
-            )
+            _run_cdc = lambda: bench_cdc_pipeline(spark, n_tx=cdc_tx)  # noqa: E731
             cdc = rerun_pipeline_if_slow(
                 prev_artifact, "cdc_pipeline", "scd2_events_per_sec_warm",
                 _run_cdc(), _run_cdc,
             )
-            # r11 verdict ask #5: bench BOTH state impls so the v1/v2 choice
-            # (applyInPandasWithState vs transformWithStateInPandas) is a
-            # measured one, not an untimed default. The v1 numbers stay at
-            # the lane's top level (BASELINE.md-comparable); v2 nests under
-            # "v2" with its own rerun adjudication. BENCH_CDC_V2=0 skips it.
-            if cdc_impl == "v1" and os.environ.get("BENCH_CDC_V2", "1") != "0":
-                try:
-                    _run_v2 = lambda: bench_cdc_pipeline(  # noqa: E731
-                        spark, n_tx=cdc_tx, impl="v2",
-                    )
-                    cdc["v2"] = rerun_pipeline_if_slow(
-                        prev_artifact.get("cdc_pipeline") or {},
-                        "v2", "scd2_events_per_sec_warm",
-                        _run_v2(), _run_v2,
-                    )
-                except Exception as e:  # noqa: BLE001
-                    cdc["v2"] = {"err": f"{type(e).__name__}: {e}"[:500]}
         except Exception as e:  # noqa: BLE001
             cdc = {"err": f"{type(e).__name__}: {e}"[:500]}
 

@@ -215,9 +215,9 @@ def fan_out(df: DataFrame, cut: bool = False) -> DataFrame:
                 continue
             break
         size = int(str(plan.stats().sizeInBytes()))
-        max_pb = int(spark.conf.get(
-            "spark.sql.files.maxPartitionBytes", "134217728"
-        ))
+        # the session's parsed value: the raw conf string may carry a size
+        # suffix ('134217728b' on a stock session, '128m' when user-set)
+        max_pb = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
         est_splits = max(1, -(-size // max_pb))
         if 2 * est_splits >= target:
             return df  # the scan already parallelizes; keep it shuffle-free

@@ -27,7 +27,6 @@ def cdc_to_scd2_stream(
     table: DeltaliteTable,
     checkpoint_dir: str,
     ttl_minutes: float | None = None,
-    impl: str = "v1",
     handle_deletes: bool = False,
     maintain: list | None = None,
 ):
@@ -36,16 +35,12 @@ def cdc_to_scd2_stream(
     StreamingQuery; caller awaits/stops. availableNow drains everything
     currently in the dirs then stops — the test/backfill trigger.
 
-    ``impl``: "v1" = applyInPandasWithState (stable), "v2" =
-    transformWithStateInPandas (Spark 4 arbitrary-state v2: O(1) ListState
-    buffer appends, native state TTL — see streaming/tx_state_v2.py).
-
     ``handle_deletes``: opt-in order-level delete tombstones (SURVEY §2.8);
     default off = reference IGNOREDELETES parity."""
     cdc = parse_data_change_events(read_text_stream(spark, cdc_dir))
     meta = parse_transaction_metadata(read_text_stream(spark, meta_dir))
     return _scd2_stream_from_values(
-        cdc, meta, table, checkpoint_dir, ttl_minutes, impl, handle_deletes,
+        cdc, meta, table, checkpoint_dir, ttl_minutes, handle_deletes,
         maintain=maintain,
     )
 
@@ -58,7 +53,6 @@ def cdc_to_scd2_stream_kafka(
     table: DeltaliteTable,
     checkpoint_dir: str,
     ttl_minutes: float | None = None,
-    impl: str = "v1",
     handle_deletes: bool = False,
     format_name: str = "kafka",
     extra_options: dict | None = None,
@@ -85,7 +79,7 @@ def cdc_to_scd2_stream_kafka(
         )
     )
     return _scd2_stream_from_values(
-        cdc, meta, table, checkpoint_dir, ttl_minutes, impl, handle_deletes,
+        cdc, meta, table, checkpoint_dir, ttl_minutes, handle_deletes,
         maintain=maintain,
     )
 
@@ -100,7 +94,6 @@ def cdc_to_scd2_stream_kafka_4topics(
     table: DeltaliteTable,
     checkpoint_dir: str,
     ttl_minutes: float | None = None,
-    impl: str = "v1",
     handle_deletes: bool = False,
     format_name: str = "kafka",
     extra_options: dict | None = None,
@@ -131,7 +124,7 @@ def cdc_to_scd2_stream_kafka_4topics(
         )
     )
     return _scd2_stream_from_values(
-        cdc, meta, table, checkpoint_dir, ttl_minutes, impl, handle_deletes,
+        cdc, meta, table, checkpoint_dir, ttl_minutes, handle_deletes,
         maintain=maintain,
     )
 
@@ -142,23 +135,13 @@ def _scd2_stream_from_values(
     table: DeltaliteTable,
     checkpoint_dir: str,
     ttl_minutes: float | None,
-    impl: str,
     handle_deletes: bool,
     maintain: list | None = None,
 ):
     unified = unify_event_streams(cdc, meta)
-    if impl == "v2":
-        from pyspark_cdc_engine.streaming.tx_state_v2 import (
-            assemble_transactions_stream_v2,
-        )
-
-        completed = assemble_transactions_stream_v2(
-            unified, ttl_minutes=ttl_minutes, handle_deletes=handle_deletes
-        )
-    else:
-        completed = assemble_transactions_stream(
-            unified, ttl_minutes=ttl_minutes, handle_deletes=handle_deletes
-        )
+    completed = assemble_transactions_stream(
+        unified, ttl_minutes=ttl_minutes, handle_deletes=handle_deletes
+    )
 
     txn_app = f"cdc_scd2:{checkpoint_dir}"
 
@@ -256,7 +239,6 @@ def cdc_to_scd2_stream_from_config(
     spark: SparkSession,
     config,
     table: DeltaliteTable,
-    impl: str = "v1",
     format_name: str = "kafka",
     extra_options: dict | None = None,
 ):
@@ -275,7 +257,6 @@ def cdc_to_scd2_stream_from_config(
         config.get_str("job.kafka.topics.transaction-metadata"),
         table,
         config.get_str("job.output.checkpoint-location"),
-        impl=impl,
         format_name=format_name,
         extra_options=extra_options,
     )

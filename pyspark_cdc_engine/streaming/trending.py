@@ -11,13 +11,10 @@ Misra-Gries summary per group key IS the bounded answer: state is ≤k
 bounds within n/(k+1).
 
 Shape: keyed streaming state — the same machinery as the transaction
-assembly, on BOTH state engines like tx_state/tx_state_v2: ``impl="v1"`` =
-``groupBy(key).applyInPandasWithState`` (stable), ``impl="v2"`` =
-``transformWithStateInPandas`` + ``StatefulProcessor`` (Spark 4's current
-arbitrary-state API; ValueState holds the ≤k-counter summary, so the per-key
-state row is tiny either way). Each trigger folds the new rows into the
-counters and emits the CURRENT top items for the key (update semantics
-downstream).
+assembly (:mod:`.tx_state`): ``groupBy(key).applyInPandasWithState`` with the
+≤k-counter summary as the per-key state row. Each trigger folds the new rows
+into the counters and emits the CURRENT top items for the key (update
+semantics downstream).
 
 (The streaming ingest dedup in :mod:`.dedup` needs no such port: it uses the
 BUILT-IN ``dropDuplicates[WithinWatermark]`` operators, whose state already
@@ -27,7 +24,6 @@ downgrade, not a port.)
 
 from __future__ import annotations
 
-import json
 import sys
 from collections.abc import Iterator
 
@@ -36,11 +32,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-    TimerValues,
-)
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -49,8 +40,6 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-
-from pyspark_cdc_engine.streaming import minipb
 
 _STATE_SCHEMA = StructType(
     [
@@ -88,7 +77,7 @@ def _fold_mg(counters: dict[str, int], terms, k: int) -> None:
 
 
 def _rank_counters(counters: dict[str, int], top: int) -> list[tuple[str, int]]:
-    """Deterministic top slice shared by both impls (count desc, term asc)."""
+    """Deterministic top slice (count desc, term asc)."""
     return sorted(counters.items(), key=lambda kv: (-kv[1], kv[0]))[:top]
 
 
@@ -98,19 +87,12 @@ def trending_terms_stream(
     term_col: str,
     k: int = 32,
     top: int = 5,
-    impl: str = "v1",
 ) -> DataFrame:
     """``(key, term, est, rank, n_seen)`` per trigger: the current top
     ``top`` Misra-Gries items for every group key, with the running item
     count. State per key is bounded at ``k`` counters regardless of
     stream length or vocabulary — the property that makes this viable as
-    always-on monitoring.
-
-    ``impl``: "v1" = applyInPandasWithState (stable), "v2" =
-    transformWithStateInPandas on Spark 4's arbitrary-state v2 runtime —
-    identical fold, state layout, and output (goldens run both)."""
-    if impl == "v2":
-        return trending_terms_stream_v2(stream, key_col, term_col, k=k, top=top)
+    always-on monitoring."""
 
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -150,84 +132,11 @@ def trending_terms_stream(
     )
 
 
-class TrendingTermsProcessor(StatefulProcessor):
-    """Misra-Gries summary as a v2 ValueState: the ≤k counters round-trip as
-    one JSON string (insertion order — which the decrement loop depends on —
-    is preserved by both Python dicts and JSON), plus the running n_seen."""
-
-    def __init__(self, term_col: str, k: int, top: int) -> None:
-        self._term_col = term_col
-        self._k = k
-        self._top = top
-
-    def __setstate__(self, state: dict) -> None:
-        # same pre-init shim routing as tx_state_v2 (see its __setstate__):
-        # workers without google.protobuf get the wire-compatible minipb
-        minipb.install()
-        self.__dict__.update(state)
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        minipb.install()
-        self._state = handle.getValueState("mg", "counters string, n_seen bigint")
-
-    def handleInputRows(
-        self, key, rows: Iterator[pd.DataFrame], timerValues: TimerValues
-    ) -> Iterator[pd.DataFrame]:
-        if self._state.exists():
-            counters_json, n_seen = self._state.get()
-            counters = dict(json.loads(counters_json))
-        else:
-            counters, n_seen = {}, 0
-        for pdf in rows:
-            vals = pdf[self._term_col].dropna()
-            n_seen += len(vals)
-            _fold_mg(counters, vals, self._k)
-        self._state.update((json.dumps(counters), int(n_seen)))
-        ranked = _rank_counters(counters, self._top)
-        yield pd.DataFrame(
-            {
-                "key": [key[0]] * len(ranked),
-                "term": [t for t, _ in ranked],
-                "est": [int(c) for _, c in ranked],
-                "rank": list(range(1, len(ranked) + 1)),
-                "n_seen": [int(n_seen)] * len(ranked),
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def trending_terms_stream_v2(
-    stream: DataFrame,
-    key_col: str,
-    term_col: str,
-    k: int = 32,
-    top: int = 5,
-) -> DataFrame:
-    """State-v2 face of :func:`trending_terms_stream` — same fold, same
-    output contract, on ``transformWithStateInPandas``."""
-    return (
-        stream.select(F.col(key_col).alias("key"), F.col(term_col).alias(term_col))
-        .groupBy("key")
-        .transformWithStateInPandas(
-            statefulProcessor=TrendingTermsProcessor(term_col, k, top),
-            outputStructType=_OUTPUT_SCHEMA,
-            outputMode="update",
-            timeMode="none",
-        )
-    )
-
-
 for _cp_name in ("pyspark.cloudpickle", "cloudpickle"):
-    try:  # pragma: no cover — same worker-shipping pattern as tx_state_v2
+    try:  # pragma: no cover — same worker-shipping pattern as tx_state
         import importlib
 
         _cp = importlib.import_module(_cp_name)
-        import pyspark_cdc_engine.streaming._state_message_spec as _sms
-
-        _cp.register_pickle_by_value(_sms)
-        _cp.register_pickle_by_value(sys.modules["pyspark_cdc_engine.streaming.minipb"])
         _cp.register_pickle_by_value(sys.modules[__name__])
-    except (ImportError, AttributeError, KeyError):
+    except (ImportError, AttributeError):
         pass

@@ -105,6 +105,12 @@ class TxBuilder:
         self._emit("ORDERS", "D", None, _order_after(order_id, version, status))
         return self
 
+    def promise(self, table: str, n: int) -> "TxBuilder":
+        """Make the metadata doc promise ``n`` events for ``table`` instead
+        of the number actually emitted (models over- and under-delivery)."""
+        self._counts[table] = n
+        return self
+
     def metadata(self) -> dict[str, Any]:
         return {
             "xid": self.xid,

@@ -4,59 +4,26 @@ scenarios): file-source streams -> transaction assembly -> SCD2 deltalite.
 
 from __future__ import annotations
 
-import pytest
-
 from pyspark_cdc_engine.streaming.pipeline import cdc_to_scd2_batch, cdc_to_scd2_stream
 from pyspark_cdc_engine.tables import DeltaliteTable
 from tests.cdc_fixtures import TxBuilder, insert_tx, write_fixture_files
 
 
-import pytest
-
-
-def _protobuf_available() -> bool:
-    # transformWithStateInPandas runs a protobuf-based state server; the
-    # container ships PySpark without protobuf, so state-v2 cannot execute
-    # here (the implementation is env-gated, not stubbed).
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        return True
-    except ImportError:
-        return False
-
-
-# v2 (transformWithStateInPandas) executes the REAL runtime everywhere: where
-# google.protobuf is absent, the minipb wire codec (streaming/minipb.py) is
-# installed at processor-unpickle time, so every golden scenario below runs
-# against the actual JVM state server under both implementations.
-_IMPLS = ["v1", "v2"]
-
-
-@pytest.fixture(params=_IMPLS)
-def impl(request):
-    """Run every golden scenario against each EXECUTABLE state implementation:
-    v1 = applyInPandasWithState, v2 = transformWithStateInPandas (state v2,
-    included whenever its protobuf state server can run)."""
-    return request.param
-
-
-def _run_stream(spark, tmp, txs, metadata_for=None, prefix="batch0", subdir="run",
-                impl="v1"):
+def _run_stream(spark, tmp, txs, metadata_for=None, prefix="batch0", subdir="run"):
     base = tmp / subdir
     write_fixture_files(base / "cdc", base / "meta", txs, metadata_for, file_prefix=prefix)
     table = DeltaliteTable(spark, str(base / "order_stream"))
     q = cdc_to_scd2_stream(
-        spark, str(base / "cdc"), str(base / "meta"), table, str(base / "ckpt"),
-        impl=impl,
+        spark, str(base / "cdc"), str(base / "meta"), table, str(base / "ckpt")
     )
     q.awaitTermination(120)
     return table, base
 
 
-def test_insert_only_transaction(spark, tmp_path, impl):
+def test_insert_only_transaction(spark, tmp_path):
     """Scenario 1: 1 order + 1 detail + N items, metadata last -> one nested row."""
     tx = insert_tx(7, xid="1.2.3.100", csn="5001")
-    table, _ = _run_stream(spark, tmp_path, [tx], impl=impl)
+    table, _ = _run_stream(spark, tmp_path, [tx])
     rows = table.read().collect()
     assert len(rows) == 1
     r = rows[0]
@@ -68,7 +35,7 @@ def test_insert_only_transaction(spark, tmp_path, impl):
     assert r.lineItems[0].itemQty is not None
 
 
-def test_rocksdb_state_store_actually_engaged(spark, tmp_path, impl):
+def test_rocksdb_state_store_actually_engaged(spark, tmp_path):
     """T5 is a conf row only if nothing proves the provider ran. Assert the
     session conf AND that the streaming checkpoint materialized RocksDB state
     artifacts (.zip snapshots / .changelog files under state/), which the
@@ -77,19 +44,19 @@ def test_rocksdb_state_store_actually_engaged(spark, tmp_path, impl):
         "spark.sql.streaming.stateStore.providerClass"
     )
     tx = insert_tx(3, xid="rocks.1", csn="9001")
-    _, base = _run_stream(spark, tmp_path, [tx], impl=impl)
+    _, base = _run_stream(spark, tmp_path, [tx])
     state = base / "ckpt" / "state"
     arts = [p for p in state.rglob("*") if p.suffix in (".zip", ".changelog")]
     assert arts, f"no RocksDB snapshot/changelog artifacts under {state}"
 
 
-def test_update_with_before_images(spark, tmp_path, impl):
+def test_update_with_before_images(spark, tmp_path):
     """Scenario 4: U events carry before images into the nested structs."""
     from tests.cdc_fixtures import _order_after
 
     tx = TxBuilder("9.9.9.1", "6001")
     tx.order(3, op="U", version=2, status="CONFIRMED", before=_order_after(3, 1, "PENDING"))
-    table, _ = _run_stream(spark, tmp_path, [tx], impl=impl)
+    table, _ = _run_stream(spark, tmp_path, [tx])
     rows = table.read().collect()
     assert len(rows) == 1
     o = rows[0].orders[0]
@@ -97,24 +64,31 @@ def test_update_with_before_images(spark, tmp_path, impl):
     assert o.before is not None and o.before.version == 1.0 and o.before.orderStatus == "PENDING"
 
 
-def test_multi_order_transaction(spark, tmp_path, impl):
+def test_multi_order_transaction(spark, tmp_path):
     """Scenario 6: one xid:csn touching 2 orders -> 2 OrderStream rows."""
     tx = TxBuilder("7.7.7.7", "7001")
     tx.order(1).item(1, 1).order(2).item(2, 1).item(2, 2)
-    table, _ = _run_stream(spark, tmp_path, [tx], impl=impl)
+    table, _ = _run_stream(spark, tmp_path, [tx])
     rows = {r.orderId: r for r in table.read().collect()}
     assert set(rows) == {1.0, 2.0}
     assert len(rows[1.0].lineItems) == 1 and len(rows[2.0].lineItems) == 2
     assert rows[1.0].xid == "7.7.7.7" and rows[2.0].csn == "7001"
 
 
-def test_never_completing_transaction_emits_nothing(spark, tmp_path, impl):
-    """Scenario 9: metadata missing -> state parks, nothing emitted."""
+def test_never_completing_transaction_emits_nothing(spark, tmp_path):
+    """Scenario 9: metadata missing -> state parks, nothing emitted. Beside
+    it, the completion rule is ``>=`` per table (T3): metadata promising one
+    line item FEWER than was sent completes with every item, metadata
+    promising one MORE parks."""
     done = insert_tx(1, "1.1.1.1", "8001")
     parked = insert_tx(2, "2.2.2.2", "8002")
-    table, _ = _run_stream(spark, tmp_path, [done, parked], metadata_for=[done], impl=impl)
-    rows = table.read().collect()
-    assert len(rows) == 1 and rows[0].orderId == 1.0
+    over = insert_tx(3, "3.3.3.3", "8003").promise("ORDER_LINE_ITEMS", 4)
+    short = insert_tx(4, "4.4.4.4", "8004").promise("ORDER_LINE_ITEMS", 3)
+    table, _ = _run_stream(spark, tmp_path, [done, parked, over, short],
+                           metadata_for=[done, over, short])
+    rows = {r.orderId: r for r in table.read().collect()}
+    assert set(rows) == {1.0, 3.0}
+    assert len(rows[3.0].lineItems) == 5  # insert_tx(3) sends 2 + 3 % 4 items
 
 
 def test_out_of_order_across_microbatches(spark, tmp_path):
@@ -260,11 +234,11 @@ def test_batch_assembly_matches_stream(spark, tmp_path):
     assert batch.count() == 5
 
 
-def test_child_only_transaction(spark, tmp_path, impl):
+def test_child_only_transaction(spark, tmp_path):
     """Scenario 5: line-item-only tx -> record with empty orders/details arrays."""
     tx = TxBuilder("c.c.c.c", "9501")
     tx.item(42, 1, op="U", version=3, qty=9.0)
-    table, _ = _run_stream(spark, tmp_path, [tx], impl=impl)
+    table, _ = _run_stream(spark, tmp_path, [tx])
     rows = table.read().collect()
     assert len(rows) == 1
     r = rows[0]
@@ -301,7 +275,7 @@ def test_duplicate_replay_semantics(spark, tmp_path):
     assert current[0].orderId == 5.0 and current[0].version == 1.0
 
 
-def test_malformed_cdc_lines_are_dropped_not_fatal(spark, tmp_path, impl):
+def test_malformed_cdc_lines_are_dropped_not_fatal(spark, tmp_path):
     """Poison-pill tolerance: garbage JSON, valid-JSON-wrong-shape, and empty
     lines interleaved with a real transaction must be dropped by the
     from_json + null-key filter (P1/P4) — the stream completes and the good
@@ -321,7 +295,7 @@ def test_malformed_cdc_lines_are_dropped_not_fatal(spark, tmp_path, impl):
     )
     table = DeltaliteTable(spark, str(base / "order_stream"))
     q = cdc_to_scd2_stream(spark, str(base / "cdc"), str(base / "meta"),
-                           table, str(base / "ckpt"), impl=impl)
+                           table, str(base / "ckpt"))
     q.awaitTermination(120)
     rows = table.read().collect()
     assert len(rows) == 1 and rows[0].orderId == 5.0

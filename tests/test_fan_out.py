@@ -4,15 +4,19 @@ so a future refactor can't silently regress them (r12 verdict ask #6)."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
+from pyspark_cdc_engine.config import get_config
 from pyspark_cdc_engine.operators.registry import fan_out
 from tests.conftest import SF_DIR
 
-# The gate only fans inputs >= engine.fan-out-min-bytes (128 KB default):
-# the sf0.001 test corpus sits below the floor BY DESIGN (fanning it only
-# slows the oracle lane), so the gate tests read the sf0.1 file, which is
-# in the fan window (800 KB, one row group, one split).
+# The gate only fans inputs >= engine.fan-out-min-bytes: the sf0.001 test
+# corpus sits below the floor BY DESIGN (fanning it only slows the oracle
+# lane), so the gate tests read the sf0.1 file, which is in the fan window
+# (800 KB, one row group, one split). Both sides of the floor are asserted
+# in test_fan_out_floor_skips_tiny_inputs.
 SF01_EMB = "/root/testdata/sf0.1/embeddings.parquet"
 
 
@@ -25,6 +29,20 @@ def test_fan_out_raises_single_split_scan_to_core_count(spark):
     assert df.rdd.getNumPartitions() == 1  # the bench corpora under-split
     fanned = fan_out(df)
     assert fanned.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+
+
+def test_fan_out_parses_suffixed_split_size(spark):
+    """maxPartitionBytes is a size conf: a stock session reports
+    '134217728b' and users write '128m'. Either form must reach the split
+    estimate as bytes, not silently disable the fan."""
+    df = spark.read.parquet(SF01_EMB)
+    prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    try:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "128m")
+        fanned = fan_out(df)
+        assert fanned.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
 
 
 def test_fan_out_is_noop_when_scan_already_parallelizes(spark):
@@ -65,6 +83,9 @@ def test_fan_out_preserves_rows(spark):
 def test_fan_out_floor_skips_tiny_inputs(spark):
     """Inputs below engine.fan-out-min-bytes never fan — the exchange's
     fixed cost cannot amortize on a few-KB frame (the oracle corpora)."""
+    floor = get_config().get_int("engine.fan-out-min-bytes")
+    assert os.path.getsize(f"{SF_DIR}/embeddings.parquet") < floor
+    assert os.path.getsize(SF01_EMB) >= floor  # the gate tests' input fans
     tiny = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")  # ~10 KB
     assert "Exchange" not in _plan(fan_out(tiny))
 

@@ -1,8 +1,9 @@
-"""HOCON parser (pyspark_cdc_engine/hocon.py): the reference's actual
-config format (reference.conf + job .conf files with `include "reference"`),
-parsed byte-for-byte as shipped, plus the spec features ordinary Typesafe
-usage relies on (r11 verdict gap #2: semantics parity existed, format
-parity didn't)."""
+"""HOCON parser (pyspark_cdc_engine/hocon.py): the reference's config
+format (reference.conf + job .conf files with `include "reference"`), read
+from our own fixtures under tests/fixtures/hocon/ (same keys, same include
+chain) and from the reference's files as shipped wherever that checkout is
+present, plus the spec features ordinary Typesafe usage relies on (r11
+verdict gap #2: semantics parity existed, format parity didn't)."""
 
 import json
 from pathlib import Path
@@ -15,11 +16,29 @@ from pyspark_cdc_engine.config import load
 from pyspark_cdc_engine.hocon import HoconError, load_hocon_file, parse_hocon
 
 REF_RES = Path("/root/reference/src/main/resources")
+FIXTURE_RES = Path(__file__).parent / "fixtures" / "hocon"
+
+
+@pytest.fixture(
+    params=[
+        FIXTURE_RES,
+        pytest.param(
+            REF_RES,
+            marks=pytest.mark.skipif(
+                not REF_RES.exists(), reason="reference checkout absent"
+            ),
+        ),
+    ],
+    ids=["fixtures", "reference"],
+)
+def res(request):
+    """Directory holding reference.conf and the three job files."""
+    return request.param
 
 
 # ------------------------------------------------------- reference files
-def test_reference_conf_parses_verbatim():
-    cfg = parse_hocon((REF_RES / "reference.conf").read_text())
+def test_reference_conf_parses_verbatim(res):
+    cfg = parse_hocon((res / "reference.conf").read_text())
     assert cfg["spark"]["dev"]["master"] == "local[*]"
     assert cfg["spark"]["dev"]["enable-hive-support"] is True
     assert cfg["spark"]["resources"]["driver-cores"] == 4
@@ -61,10 +80,10 @@ def test_reference_conf_parses_verbatim():
         ),
     ],
 )
-def test_reference_job_files_with_include(name, expect):
+def test_reference_job_files_with_include(res, name, expect):
     """The three job files include "reference" — load_hocon_file resolves
     it relative to the file and deep-merges, exactly Typesafe's layering."""
-    cfg = load_hocon_file(REF_RES / name)
+    cfg = load_hocon_file(res / name)
     for path, want in expect.items():
         node = cfg
         for p in path:
@@ -72,11 +91,11 @@ def test_reference_job_files_with_include(name, expect):
         assert node == want, (path, node)
 
 
-def test_config_load_accepts_reference_conf_directly():
+def test_config_load_accepts_reference_conf_directly(res):
     """config.load(config_file=<reference .conf>) — the r11 'user's existing
     .conf needs conversion' gap, closed: flattened keys come out under the
     same dotted names the JSON path produced."""
-    cfg = load(config_file=REF_RES / "transactional-cdc-processing.conf")
+    cfg = load(config_file=res / "transactional-cdc-processing.conf")
     assert cfg.get("job.name") == "transactional-cdc-processing"
     assert (
         cfg.get("job.kafka.topics.transaction-metadata")

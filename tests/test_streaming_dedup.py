@@ -6,8 +6,6 @@ from __future__ import annotations
 
 import json
 
-import pytest
-
 from pyspark_cdc_engine.streaming.dedup import dedup_stream_exact
 
 
@@ -80,14 +78,11 @@ def test_only_hash_enters_state_schema(spark, tmp_path):
     assert dd and all("content_md5" in ln and "text" not in ln for ln in dd)
 
 
-@pytest.mark.parametrize("impl", ["v1", "v2"])
-def test_trending_terms_state_survives_micro_batches(spark, tmp_path, impl):
+def test_trending_terms_state_survives_micro_batches(spark, tmp_path):
     """streaming/trending.py: per-key Misra-Gries counters live in keyed
     streaming state — a term's count accumulates ACROSS micro-batches, the
     per-key state stays bounded at k counters, and each trigger emits the
-    current top items. Parametrized over both state engines (v1 =
-    applyInPandasWithState, v2 = transformWithStateInPandas), like the
-    transaction-assembly goldens."""
+    current top items."""
     import json
 
     from pyspark_cdc_engine.streaming.trending import trending_terms_stream
@@ -108,7 +103,7 @@ def test_trending_terms_state_survives_micro_batches(spark, tmp_path, impl):
         .option("maxFilesPerTrigger", "1")
         .json(str(src))
     )
-    out = trending_terms_stream(stream, "k", "term", k=4, top=3, impl=impl)
+    out = trending_terms_stream(stream, "k", "term", k=4, top=3)
     batches: list[list] = []
 
     def sink(df, bid):
@@ -139,11 +134,9 @@ def test_trending_terms_state_survives_micro_batches(spark, tmp_path, impl):
         assert all(ranks == list(range(1, len(ranks) + 1)) for ranks in per_key.values())
 
 
-@pytest.mark.parametrize("impl", ["v1", "v2"])
-def test_trending_terms_ignore_null_terms(spark, tmp_path, impl):
+def test_trending_terms_ignore_null_terms(spark, tmp_path):
     """Review r5b: null terms are absent fields, not items — they must not
-    consume a counter slot, inflate n_seen, or appear in the top-k. Both
-    state engines."""
+    consume a counter slot, inflate n_seen, or appear in the top-k."""
     import json
 
     from pyspark_cdc_engine.streaming.trending import trending_terms_stream
@@ -154,7 +147,7 @@ def test_trending_terms_ignore_null_terms(spark, tmp_path, impl):
         for t in ["x", "x", None, "y", None]:
             fh.write(json.dumps({"k": "A", "term": t}) + "\n")
     stream = spark.readStream.schema("k string, term string").json(str(src))
-    out = trending_terms_stream(stream, "k", "term", k=2, top=3, impl=impl)
+    out = trending_terms_stream(stream, "k", "term", k=2, top=3)
     rows: list = []
 
     def sink(df, bid):
