@@ -25,9 +25,10 @@ from pyspark.sql import DataFrame
 from pyspark_cdc_engine.config import get_config
 
 
-def materialize_async(df: DataFrame):
+def materialize_async(df: DataFrame) -> "AsyncMaterialize":
     """Start :func:`materialize` of ``df`` on a driver thread and return a
-    zero-arg callable that joins and yields the materialized frame.
+    handle: call it to join and get the materialized frame, or ``cancel()``
+    it.
 
     Guide §2.6 — overlap independent jobs: Spark happily runs several jobs
     at once inside one application; actions are only sequential because
@@ -36,29 +37,55 @@ def materialize_async(df: DataFrame):
     hides its wall entirely behind the (inherently serial) Lloyd's rounds
     instead of appending it to them (r13, the r12 verdict's #1: the trained
     family is a chain of small serial jobs). ``InheritableThread`` keeps
-    job-group/description props and py4j thread cleanup correct. Errors
-    re-raise at join time; results are identical to a synchronous
-    materialize (same lineage cut, same values)."""
-    from pyspark import InheritableThread
+    job description props and py4j thread cleanup correct. Errors re-raise
+    at join time; results are identical to a synchronous materialize (same
+    lineage cut, same values).
 
-    box: dict = {}
+    The thread's job runs under its own job group, ``<caller's group>/
+    materialize_async-<id>`` (so a profiler filtering on the caller's group
+    prefix still counts it). A caller whose own work can fail cancels the
+    handle in a ``finally``: nothing else stops the job once the caller has
+    stopped waiting for it, and after a successful join the cancel is a
+    no-op."""
+    return AsyncMaterialize(df)
 
-    def _run() -> None:
+
+class AsyncMaterialize:
+    """Handle of one :func:`materialize_async` run."""
+
+    def __init__(self, df: DataFrame) -> None:
+        import uuid
+
+        from pyspark import InheritableThread
+
+        self._sc = df.sparkSession.sparkContext
+        parent = self._sc.getLocalProperty("spark.jobGroup.id")
+        name = f"materialize_async-{uuid.uuid4().hex[:12]}"
+        self.group = f"{parent}/{name}" if parent else name
+        self._box: dict = {}
+        self._thread = InheritableThread(target=self._run, args=(df,), daemon=True)
+        self._thread.start()
+
+    def _run(self, df: DataFrame) -> None:
         try:
-            box["df"] = materialize(df)
+            self._sc.setJobGroup(self.group, "materialize_async")
+            self._box["df"] = materialize(df)
         except BaseException as e:  # noqa: BLE001 — re-raised at join
-            box["err"] = e
+            self._box["err"] = e
 
-    t = InheritableThread(target=_run, daemon=True)
-    t.start()
+    def __call__(self) -> DataFrame:
+        self._thread.join()
+        if "err" in self._box:
+            raise self._box["err"]
+        return self._box["df"]
 
-    def result() -> DataFrame:
-        t.join()
-        if "err" in box:
-            raise box["err"]
-        return box["df"]
-
-    return result
+    def cancel(self) -> None:
+        """Cancel the job if it still runs and wait for the thread to end
+        (a join then raises the cancellation). Cancelling repeats until the
+        thread ends, so a job it submits after the first cancel stops too."""
+        while self._thread.is_alive():
+            self._sc.cancelJobGroup(self.group)
+            self._thread.join(0.5)
 
 
 def materialize_lazy(df: DataFrame) -> DataFrame:

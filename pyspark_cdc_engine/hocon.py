@@ -20,7 +20,8 @@ ordinary Typesafe usage) rely on, from the PUBLIC HOCON spec
   a missing ``required(...)`` raises
 - ``${path}`` / ``${?path}`` substitutions resolved against the merged
   tree (self-referential chains raise), with ``${?x}`` falling back to
-  the environment then dropping the key, per spec
+  the environment, then to the value it overrode, then dropping the key,
+  per spec
 - string value concatenation on one line (``${base}"/sub"``,
   ``foo bar`` -> ``"foo bar"``)
 
@@ -48,16 +49,20 @@ class HoconError(ValueError):
 
 _UNQUOTED_END = set('$"{}[]:=,+#`^?!@*&\\')
 _WS = " \t\r"
+_DROP = object()  # an optional substitution that resolved to nothing
 
 
 class _Sub:
-    """A pending ``${path}`` substitution inside a value."""
+    """A pending ``${path}`` substitution inside a value. ``fallback`` is
+    the value an optional substitution overrode: per spec it survives when
+    the substitution is undefined."""
 
-    __slots__ = ("path", "optional")
+    __slots__ = ("path", "optional", "fallback")
 
-    def __init__(self, path: str, optional: bool) -> None:
+    def __init__(self, path: str, optional: bool, fallback: Any = _DROP) -> None:
         self.path = path
         self.optional = optional
+        self.fallback = fallback
 
     def __repr__(self) -> str:  # pragma: no cover - debug aid
         return f"${{{'?' if self.optional else ''}{self.path}}}"
@@ -389,7 +394,7 @@ def _merge_path(tree: dict, path: list[str], val: Any) -> None:
     if isinstance(val, dict) and isinstance(cur.get(leaf), dict):
         _deep_merge(cur[leaf], val)
     else:
-        cur[leaf] = val
+        cur[leaf] = _override(cur, leaf, val)
 
 
 def _deep_merge(dst: dict, src: dict) -> None:
@@ -397,7 +402,16 @@ def _deep_merge(dst: dict, src: dict) -> None:
         if isinstance(v, dict) and isinstance(dst.get(k), dict):
             _deep_merge(dst[k], v)
         else:
-            dst[k] = v
+            dst[k] = _override(dst, k, v)
+
+
+def _override(tree: dict, key: str, val: Any) -> Any:
+    """``val`` replacing ``tree[key]``: a bare ``${?x}`` keeps the earlier
+    value as its fallback (spec: an undefined optional substitution leaves
+    a previously-set field as it was)."""
+    if isinstance(val, _Sub) and val.optional and key in tree:
+        return _Sub(val.path, True, fallback=tree[key])
+    return val
 
 
 # ---------------------------------------------------------- substitutions
@@ -435,9 +449,6 @@ def _resolve(tree: dict, node: Any, stack: tuple[str, ...]) -> Any:
     return node
 
 
-_DROP = object()
-
-
 def _resolve_sub(tree: dict, sub: _Sub, stack: tuple[str, ...]) -> Any:
     if sub.path in stack:
         raise HoconError(
@@ -450,7 +461,7 @@ def _resolve_sub(tree: dict, sub: _Sub, stack: tuple[str, ...]) -> Any:
         if sub.path in os.environ:
             return os.environ[sub.path]
         if sub.optional:
-            return _DROP
+            return _resolve(tree, sub.fallback, stack)
         raise HoconError(f"unresolved substitution ${{{sub.path}}}") from None
     return _resolve(tree, target, stack + (sub.path,))
 

@@ -1533,7 +1533,6 @@ def pq_trained_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark_cdc_engine.checkpointing import materialize_async
 
     ex = _pq_ex(spark, sf_dir)
-    exact_async = materialize_async(_pq_exact_topk(spark, sf_dir))
 
     def adc_topk(cb: DataFrame) -> DataFrame:
         # d2 feeds both the code argmin and the query distance table, but
@@ -1569,15 +1568,19 @@ def pq_trained_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("query_id", "neighbor_id")
         )
 
-    firstk = adc_topk(train_pq_codebooks(spark, sf_dir, 0)).withColumn(
-        "hitf", F.lit(1)
-    )
-    trained = adc_topk(train_pq_codebooks(spark, sf_dir, _PQ_T)).withColumn(
-        "hitt", F.lit(1)
-    )
-    hf = F.sum(F.coalesce(F.col("hitf"), F.lit(0)))
-    ht = F.sum(F.coalesce(F.col("hitt"), F.lit(0)))
-    exact = exact_async()
+    exact_async = materialize_async(_pq_exact_topk(spark, sf_dir))
+    try:
+        firstk = adc_topk(train_pq_codebooks(spark, sf_dir, 0)).withColumn(
+            "hitf", F.lit(1)
+        )
+        trained = adc_topk(train_pq_codebooks(spark, sf_dir, _PQ_T)).withColumn(
+            "hitt", F.lit(1)
+        )
+        hf = F.sum(F.coalesce(F.col("hitf"), F.lit(0)))
+        ht = F.sum(F.coalesce(F.col("hitt"), F.lit(0)))
+        exact = exact_async()
+    finally:
+        exact_async.cancel()
     return (
         exact.join(firstk, ["query_id", "neighbor_id"], "left")
         .join(trained, ["query_id", "neighbor_id"], "left")
@@ -3241,31 +3244,33 @@ def ann_trained_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     # thread so its wall hides behind the serial Lloyd's collects below
     # (guide §2.6 — overlap independent jobs; r13). Output is panel×k rows.
     bf_async = materialize_async(bf)
+    try:
+        # first-C search: the untrained-seed assignment every IVF kernel uses
+        assigned_fc = _ivf_assigned_df(spark, sf_dir)
+        cents_fc = emb.filter(F.col("vec_id") < _IVF_C).select(
+            F.col("vec_id").alias("centroid_id"),
+            F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("cemb"),
+        )
+        fc = _multiprobe_topk(
+            assigned_fc, _probes_vs_centroids(q, cents_fc, _IVF_NPROBE)
+        ).withColumn("hitf", F.lit(1))
 
-    # first-C search: the untrained-seed assignment every IVF kernel uses
-    assigned_fc = _ivf_assigned_df(spark, sf_dir)
-    cents_fc = emb.filter(F.col("vec_id") < _IVF_C).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("cemb"),
-    )
-    fc = _multiprobe_topk(
-        assigned_fc, _probes_vs_centroids(q, cents_fc, _IVF_NPROBE)
-    ).withColumn("hitf", F.lit(1))
+        # trained search: same Lloyd's training as ann_ivf_trained, sharing the
+        # materialized norm table with the brute-force side above
+        vecs = emb.select("vec_id", "embedding")
+        cents_tr = train_kmeans(vecs, _IVF_C, _KM_ITERS, norms=norms)
+        assigned_tr = embn.join(
+            assign_to_centroids(vecs, cents_tr, norms=norms), "vec_id"
+        )
+        tr = _multiprobe_topk(
+            assigned_tr, _probes_vs_centroids(q, cents_tr, _IVF_NPROBE)
+        ).withColumn("hitt", F.lit(1))
 
-    # trained search: same Lloyd's training as ann_ivf_trained, sharing the
-    # materialized norm table with the brute-force side above
-    vecs = emb.select("vec_id", "embedding")
-    cents_tr = train_kmeans(vecs, _IVF_C, _KM_ITERS, norms=norms)
-    assigned_tr = embn.join(
-        assign_to_centroids(vecs, cents_tr, norms=norms), "vec_id"
-    )
-    tr = _multiprobe_topk(
-        assigned_tr, _probes_vs_centroids(q, cents_tr, _IVF_NPROBE)
-    ).withColumn("hitt", F.lit(1))
-
-    hf = F.sum(F.coalesce(F.col("hitf"), F.lit(0)))
-    ht = F.sum(F.coalesce(F.col("hitt"), F.lit(0)))
-    bf = bf_async()
+        hf = F.sum(F.coalesce(F.col("hitf"), F.lit(0)))
+        ht = F.sum(F.coalesce(F.col("hitt"), F.lit(0)))
+        bf = bf_async()
+    finally:
+        bf_async.cancel()
     return (
         bf.join(fc, ["query_id", "neighbor_id"], "left")
         .join(tr, ["query_id", "neighbor_id"], "left")
@@ -3625,32 +3630,34 @@ def ann_trained_recall_heldout(spark: SparkSession, sf_dir: str) -> DataFrame:
     # thread so its wall hides behind the serial Lloyd's collects below
     # (guide §2.6 — overlap independent jobs; r13). Output is panel×k rows.
     bf_async = materialize_async(bf)
+    try:
+        # first-C search: the untrained-seed assignment every IVF kernel uses,
+        # probes ranked against the same first-C centroid frame
+        assigned_fc = _ivf_assigned_df(spark, sf_dir)
+        cents_fc = emb.filter(F.col("vec_id") < _IVF_C).select(
+            F.col("vec_id").alias("centroid_id"),
+            F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("cemb"),
+        )
+        fc = _multiprobe_topk(
+            assigned_fc, _probes_vs_centroids(q, cents_fc, _IVF_NPROBE)
+        ).withColumn("hitf", F.lit(1))
 
-    # first-C search: the untrained-seed assignment every IVF kernel uses,
-    # probes ranked against the same first-C centroid frame
-    assigned_fc = _ivf_assigned_df(spark, sf_dir)
-    cents_fc = emb.filter(F.col("vec_id") < _IVF_C).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("cemb"),
-    )
-    fc = _multiprobe_topk(
-        assigned_fc, _probes_vs_centroids(q, cents_fc, _IVF_NPROBE)
-    ).withColumn("hitf", F.lit(1))
+        # trained search: same Lloyd's training as ann_ivf_trained, sharing the
+        # materialized norm table with the brute-force side above
+        vecs = emb.select("vec_id", "embedding")
+        cents_tr = train_kmeans(vecs, _IVF_C, _KM_ITERS, norms=norms)
+        assigned_tr = embn.join(
+            assign_to_centroids(vecs, cents_tr, norms=norms), "vec_id"
+        )
+        tr = _multiprobe_topk(
+            assigned_tr, _probes_vs_centroids(q, cents_tr, _IVF_NPROBE)
+        ).withColumn("hitt", F.lit(1))
 
-    # trained search: same Lloyd's training as ann_ivf_trained, sharing the
-    # materialized norm table with the brute-force side above
-    vecs = emb.select("vec_id", "embedding")
-    cents_tr = train_kmeans(vecs, _IVF_C, _KM_ITERS, norms=norms)
-    assigned_tr = embn.join(
-        assign_to_centroids(vecs, cents_tr, norms=norms), "vec_id"
-    )
-    tr = _multiprobe_topk(
-        assigned_tr, _probes_vs_centroids(q, cents_tr, _IVF_NPROBE)
-    ).withColumn("hitt", F.lit(1))
-
-    hf = F.sum(F.coalesce(F.col("hitf"), F.lit(0)))
-    ht = F.sum(F.coalesce(F.col("hitt"), F.lit(0)))
-    bf = bf_async()
+        hf = F.sum(F.coalesce(F.col("hitf"), F.lit(0)))
+        ht = F.sum(F.coalesce(F.col("hitt"), F.lit(0)))
+        bf = bf_async()
+    finally:
+        bf_async.cancel()
     return (
         bf.join(fc, ["query_id", "neighbor_id"], "left")
         .join(tr, ["query_id", "neighbor_id"], "left")

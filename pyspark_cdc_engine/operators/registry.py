@@ -13,11 +13,15 @@ sf0.01 (order-insensitive, columns sorted by name), so:
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Callable
 from dataclasses import dataclass
 
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+log = logging.getLogger(__name__)
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -197,7 +201,10 @@ def fan_out(df: DataFrame, cut: bool = False) -> DataFrame:
     and at scale the gate makes the whole call a no-op, so nothing
     corpus-sized is ever pinned). The cut does defeat scan pushdown for
     pruned consumers — acceptable exactly because the gate proved the
-    frame tiny."""
+    frame tiny.
+
+    Each decision is logged as one line under this module's logger: fanned
+    to N, or skipped with its reason."""
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
     try:
@@ -209,6 +216,7 @@ def fan_out(df: DataFrame, cut: bool = False) -> DataFrame:
                         "RebalancePartitions", "LogicalRDD"):
                 # LogicalRDD = an upstream materialize()/localCheckpoint —
                 # it already carries the fanned partitioning
+                log.info("fan_out skipped: upstream fan (%s)", name)
                 return df
             if name in ("Project", "Filter") and node.children().size() == 1:
                 node = node.children().apply(0)
@@ -218,17 +226,27 @@ def fan_out(df: DataFrame, cut: bool = False) -> DataFrame:
         # the session's parsed value: the raw conf string may carry a size
         # suffix ('134217728b' on a stock session, '128m' when user-set)
         max_pb = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-        est_splits = max(1, -(-size // max_pb))
-        if 2 * est_splits >= target:
-            return df  # the scan already parallelizes; keep it shuffle-free
-        from pyspark_cdc_engine.config import get_config
+    except Py4JError as e:
+        # never inject a corpus shuffle blind; a Java error's first line only
+        log.warning("fan_out skipped: introspection failed: %s: %s",
+                    type(e).__name__, (str(e).splitlines() or [""])[0])
+        return df
+    est_splits = max(1, -(-size // max_pb))
+    if 2 * est_splits >= target:
+        # the scan already parallelizes; keep it shuffle-free
+        log.info("fan_out skipped: scan already split (%d est. splits, %d cores)",
+                 est_splits, target)
+        return df
+    from pyspark_cdc_engine.config import get_config
 
-        if size < get_config().get_int("engine.fan-out-min-bytes"):
-            # too small for the exchange's fixed cost to ever amortize —
-            # e.g. the sf0.001/sf0.01 oracle corpora (measured r13)
-            return df
-    except Exception:
-        return df  # introspection failed: never inject a corpus shuffle blind
+    floor = get_config().get_int("engine.fan-out-min-bytes")
+    if size < floor:
+        # too small for the exchange's fixed cost to ever amortize —
+        # e.g. the sf0.001/sf0.01 oracle corpora (measured r13)
+        log.info("fan_out skipped: below floor (%d < %d bytes)", size, floor)
+        return df
+    log.info("fan_out fanned to %d (%d bytes, %d est. splits)",
+             target, size, est_splits)
     df = df.repartition(target)
     if cut:
         from pyspark_cdc_engine.checkpointing import materialize

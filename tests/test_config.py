@@ -13,7 +13,7 @@ from pathlib import Path
 import pytest
 
 from pyspark_cdc_engine import config as cfgmod
-from pyspark_cdc_engine.checkpointing import materialize
+from pyspark_cdc_engine.checkpointing import materialize, materialize_async
 from pyspark_cdc_engine.config import AppConfig, DEFAULTS, env_name, load
 
 
@@ -148,6 +148,51 @@ def test_materialize_reliable_when_configured(spark, tmp_path, monkeypatch):
     assert any(p.name.startswith("rdd-") for p in ckpt.rglob("rdd-*")), (
         "no reliable checkpoint artifacts written"
     )
+
+
+def test_materialize_async_cancel_stops_its_job(spark):
+    """A caller whose training loop fails cancels the ground-truth job it
+    started: the job stops within seconds and joining raises."""
+    import time
+
+    from pyspark.sql import functions as F
+
+    @F.udf("long")
+    def slow(x):
+        import time
+
+        time.sleep(60)
+        return x
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup("caller", "async cancel test")
+    try:
+        handle = materialize_async(
+            spark.range(2, numPartitions=2).select(slow("id").alias("id"))
+        )
+    finally:
+        sc._jsc.clearJobGroup()
+    # nested under the caller's group, so a per-group profile counts it
+    assert handle.group.startswith("caller/materialize_async-")
+
+    def running() -> list[int]:
+        return [
+            j for j in tracker.getJobIdsForGroup(handle.group)
+            if tracker.getJobInfo(j).status == "RUNNING"
+        ]
+
+    deadline = time.monotonic() + 30
+    while not running():
+        assert time.monotonic() < deadline, "async job never started"
+        time.sleep(0.1)
+    handle.cancel()
+    deadline = time.monotonic() + 5
+    while running():
+        assert time.monotonic() < deadline, "async job still running"
+        time.sleep(0.1)
+    with pytest.raises(Exception, match="cancel"):
+        handle()
 
 
 def test_connected_components_identical_under_reliable_checkpoint(

@@ -4,8 +4,12 @@ so a future refactor can't silently regress them (r12 verdict ask #6)."""
 
 from __future__ import annotations
 
+import logging
 import os
+from types import SimpleNamespace
 
+import pytest
+from py4j.protocol import Py4JError
 from pyspark.sql import functions as F
 
 from pyspark_cdc_engine.config import get_config
@@ -14,23 +18,43 @@ from tests.conftest import SF_DIR
 
 # The gate only fans inputs >= engine.fan-out-min-bytes: the sf0.001 test
 # corpus sits below the floor BY DESIGN (fanning it only slows the oracle
-# lane), so the gate tests read the sf0.1 file, which is in the fan window
-# (800 KB, one row group, one split). Both sides of the floor are asserted
-# in test_fan_out_floor_skips_tiny_inputs.
-SF01_EMB = "/root/testdata/sf0.1/embeddings.parquet"
+# lane), so the gate tests read the bench's sf0.1 file, which is in the fan
+# window (800 KB, one row group, one split). Both sides of the floor are
+# asserted in test_fan_out_floor_skips_tiny_inputs.
+SF01_EMB = os.path.join(
+    os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
+    "embeddings.parquet",
+)
+needs_sf01 = pytest.mark.skipif(
+    not os.path.exists(SF01_EMB), reason=f"bench corpus absent: {SF01_EMB}"
+)
+FAN_LOGGER = "pyspark_cdc_engine.operators.registry"
 
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_fan_out_raises_single_split_scan_to_core_count(spark):
+@pytest.fixture(autouse=True)
+def _fan_out_decisions_logged(caplog):
+    caplog.set_level(logging.INFO, logger=FAN_LOGGER)
+
+
+def _decisions(caplog) -> list[str]:
+    return [r.getMessage() for r in caplog.records if r.name == FAN_LOGGER]
+
+
+@needs_sf01
+def test_fan_out_raises_single_split_scan_to_core_count(spark, caplog):
     df = spark.read.parquet(SF01_EMB)
     assert df.rdd.getNumPartitions() == 1  # the bench corpora under-split
     fanned = fan_out(df)
     assert fanned.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    (line,) = _decisions(caplog)
+    assert line.startswith(f"fan_out fanned to {fanned.rdd.getNumPartitions()} (")
 
 
+@needs_sf01
 def test_fan_out_parses_suffixed_split_size(spark):
     """maxPartitionBytes is a size conf: a stock session reports
     '134217728b' and users write '128m'. Either form must reach the split
@@ -45,7 +69,8 @@ def test_fan_out_parses_suffixed_split_size(spark):
         spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
 
 
-def test_fan_out_is_noop_when_scan_already_parallelizes(spark):
+@needs_sf01
+def test_fan_out_is_noop_when_scan_already_parallelizes(spark, caplog):
     df = spark.read.parquet(SF01_EMB)
     prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
     try:
@@ -56,23 +81,51 @@ def test_fan_out_is_noop_when_scan_already_parallelizes(spark):
         assert "Exchange" not in _plan(fanned)
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+    (line,) = _decisions(caplog)
+    assert line.startswith("fan_out skipped: scan already split (")
 
 
-def test_fan_out_does_not_stack_on_composition(spark):
+@needs_sf01
+def test_fan_out_does_not_stack_on_composition(spark, caplog):
     df = spark.read.parquet(SF01_EMB)
     once = fan_out(df)
     twice = fan_out(once.select("vec_id", "embedding"))
     assert _plan(twice).count("Exchange") == 1
+    assert _decisions(caplog)[1] == "fan_out skipped: upstream fan (Repartition)"
 
 
-def test_fan_out_skips_materialized_frames(spark):
+@needs_sf01
+def test_fan_out_skips_materialized_frames(spark, caplog):
     df = spark.read.parquet(SF01_EMB)
     cut = fan_out(df, cut=True)
     assert cut.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
     refan = fan_out(cut.select("vec_id"))
     assert "Exchange" not in _plan(refan)
+    assert _decisions(caplog)[1] == "fan_out skipped: upstream fan (LogicalRDD)"
 
 
+@needs_sf01
+def test_fan_out_raises_on_bad_floor_setting(spark, monkeypatch):
+    """Only JVM introspection failures fall back; a malformed setting is a
+    configuration error and must surface, not turn the fan off."""
+    monkeypatch.setenv("CDC_CONF_ENGINE_FAN_OUT_MIN_BYTES", "lots")
+    with pytest.raises(ValueError):
+        fan_out(spark.read.parquet(SF01_EMB))
+
+
+def test_fan_out_logs_introspection_failure(spark, caplog):
+    class _Jdf:
+        def queryExecution(self):
+            raise Py4JError("no plan")
+
+    df = SimpleNamespace(sparkSession=spark, _jdf=_Jdf())
+    assert fan_out(df) is df
+    assert _decisions(caplog) == [
+        "fan_out skipped: introspection failed: Py4JError: no plan"
+    ]
+
+
+@needs_sf01
 def test_fan_out_preserves_rows(spark):
     df = spark.read.parquet(SF01_EMB).select("vec_id")
     a = sorted(r.vec_id for r in df.collect())
@@ -80,7 +133,8 @@ def test_fan_out_preserves_rows(spark):
     assert a == b
 
 
-def test_fan_out_floor_skips_tiny_inputs(spark):
+@needs_sf01
+def test_fan_out_floor_skips_tiny_inputs(spark, caplog):
     """Inputs below engine.fan-out-min-bytes never fan — the exchange's
     fixed cost cannot amortize on a few-KB frame (the oracle corpora)."""
     floor = get_config().get_int("engine.fan-out-min-bytes")
@@ -88,6 +142,9 @@ def test_fan_out_floor_skips_tiny_inputs(spark):
     assert os.path.getsize(SF01_EMB) >= floor  # the gate tests' input fans
     tiny = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")  # ~10 KB
     assert "Exchange" not in _plan(fan_out(tiny))
+    (line,) = _decisions(caplog)
+    assert line.startswith("fan_out skipped: below floor (")
+    assert line.endswith(f" < {floor} bytes)")
 
 
 def test_pq_exact_topk_is_zip_with_free(spark):

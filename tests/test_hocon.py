@@ -157,12 +157,26 @@ def test_substitutions_resolve_from_tree():
     assert cfg["ref"] == 7
 
 
-def test_optional_substitution_drops_and_env_fallback(monkeypatch):
+def test_optional_substitution_drops_and_env_fallback(monkeypatch, tmp_path):
     cfg = parse_hocon("a = ${?nope.missing}\nb = 1")
     assert cfg == {"b": 1}
     monkeypatch.setenv("HOCON_TEST_ENV", "zz")
     cfg = parse_hocon("a = ${?HOCON_TEST_ENV}")
     assert cfg == {"a": "zz"}
+    # an undefined ${?x} keeps the value it would have overridden
+    cfg = parse_hocon("a = 1\na = ${?UNSET}\nb { c = 2 }\nb.c = ${?NOPE}")
+    assert cfg == {"a": 1, "b": {"c": 2}}
+    cfg = parse_hocon("b { c = 2, d = 3 }\nb { c = ${?NOPE} }\ne = ${b.c}")
+    assert cfg == {"b": {"c": 2, "d": 3}, "e": 2}
+    cfg = parse_hocon("a = 1\na = ${?NOPE}\na = ${?HOCON_TEST_ENV}")
+    assert cfg == {"a": "zz"}
+    # the idiom it enables: default in reference.conf, env override in the job
+    (tmp_path / "reference.conf").write_text("x { port = 9092, host = h }\n")
+    job = tmp_path / "job.conf"
+    job.write_text('include "reference"\nx.port = ${?HOCON_TEST_PORT}\n')
+    assert load_hocon_file(job) == {"x": {"port": 9092, "host": "h"}}
+    monkeypatch.setenv("HOCON_TEST_PORT", "9093")
+    assert load_hocon_file(job) == {"x": {"port": "9093", "host": "h"}}
 
 
 def test_mandatory_missing_substitution_raises():
