@@ -43,10 +43,10 @@ def materialize_async(df: DataFrame) -> "AsyncMaterialize":
 
     The thread's job runs under its own job group, ``<caller's group>/
     materialize_async-<id>`` (so a profiler filtering on the caller's group
-    prefix still counts it). A caller whose own work can fail cancels the
-    handle in a ``finally``: nothing else stops the job once the caller has
-    stopped waiting for it, and after a successful join the cancel is a
-    no-op."""
+    prefix still counts it), and keeps the caller's job description. A
+    caller whose own work can fail cancels the handle in a ``finally``:
+    nothing else stops the job once the caller has stopped waiting for it,
+    and after a successful join the cancel is a no-op."""
     return AsyncMaterialize(df)
 
 
@@ -68,7 +68,9 @@ class AsyncMaterialize:
 
     def _run(self, df: DataFrame) -> None:
         try:
-            self._sc.setJobGroup(self.group, "materialize_async")
+            # the group only: the caller's job description and
+            # interrupt-on-cancel flag, inherited by the thread, stay
+            self._sc.setLocalProperty("spark.jobGroup.id", self.group)
             self._box["df"] = materialize(df)
         except BaseException as e:  # noqa: BLE001 — re-raised at join
             self._box["err"] = e

@@ -18,6 +18,7 @@ from collections.abc import Callable
 from dataclasses import dataclass
 
 from py4j.protocol import Py4JError
+from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -226,8 +227,10 @@ def fan_out(df: DataFrame, cut: bool = False) -> DataFrame:
         # the session's parsed value: the raw conf string may carry a size
         # suffix ('134217728b' on a stock session, '128m' when user-set)
         max_pb = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-    except Py4JError as e:
-        # never inject a corpus shuffle blind; a Java error's first line only
+    except (Py4JError, CapturedException) as e:
+        # never inject a corpus shuffle blind. A JVM error surfaces raw or,
+        # once the session's exception handler converted it, as a
+        # CapturedException (AnalysisException, ...); log its first line only
         log.warning("fan_out skipped: introspection failed: %s: %s",
                     type(e).__name__, (str(e).splitlines() or [""])[0])
         return df

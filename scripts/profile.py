@@ -9,18 +9,17 @@ status store the UI REST API serves (``jobs``, ``stages/<id>``), in-process,
 so a session with ``spark.ui.enabled=false`` profiles too. A header line
 gives ``cores`` (``SPARK_GRAFT_CPUS``, as the session factory reads it),
 ``sf_dir``, ``scale`` and the ``commit`` of the imported engine's checkout.
-``driver_gap_s`` is wall minus the summed job durations;
-``single_task_stages`` lists one-task stages that ran over 1 s.
+``job_s`` gives the job durations by job id, ``driver_gap_s`` the wall time in
+which no job ran, ``single_task_stages`` the one-task stages over 1 s.
 
     python scripts/profile.py kmeans_distortion_report --runs 2
-    SPARK_GRAFT_CPUS=2 python scripts/profile.py q1 q2 --out prof.jsonl
+    SPARK_GRAFT_CPUS=2 python scripts/profile.py q1 q2 >> prof.jsonl
     python scripts/profile.py q1 --scale 10      # on a 10x copy of the data
-    python scripts/profile.py q1 --plans plans   # also explain("formatted")
     python scripts/profile.py --compare a.jsonl b.jsonl
 
-``--out`` appends, so repeated runs pool in one file. ``--compare`` gives per
-query the ratio B/A of the median warmed walls, then the geomean and the
-counts of queries more than 10% slower or faster.
+``--compare`` gives per query the ratio B/A of the median warmed walls, then
+the geomean and the counts of queries more than 10% slower or faster. Records
+go to stdout, Spark's logs to stderr, so ``>>`` pools runs in one file.
 
 A/B of two commits, never rewriting the working tree: the checkout first on
 ``PYTHONPATH`` supplies the engine; alternate the sides, each run with the
@@ -28,8 +27,8 @@ untouched control ``pricing_summary``::
 
     git worktree add ../base <commit>
     for i in 1 2 3; do
-      PYTHONPATH=../base python scripts/profile.py pricing_summary Q --out a.jsonl
-      python scripts/profile.py pricing_summary Q --out b.jsonl
+      PYTHONPATH=../base python scripts/profile.py pricing_summary Q >> a.jsonl
+      python scripts/profile.py pricing_summary Q >> b.jsonl
     done
     python scripts/profile.py --compare a.jsonl b.jsonl
     git worktree remove ../base
@@ -38,7 +37,6 @@ untouched control ``pricing_summary``::
 from __future__ import annotations
 
 import argparse
-import contextlib
 import json
 import math
 import os
@@ -89,7 +87,10 @@ def _record(store: _StatusStore, group: str, query: str, run: int, wall: float) 
     stage_ids = sorted({s for j in jobs for s in j["stageIds"]})
     stages = [a for s in stage_ids for a in store.stage_attempts(s) if a["status"] == "COMPLETE"]
     tasks = [s["numTasks"] for s in stages]
-    job_ms = sum(j["completionTime"] - j["submissionTime"] for j in jobs if j.get("completionTime"))
+    done = sorted((j for j in jobs if j.get("completionTime")), key=lambda j: j["jobId"])
+    busy_ms, end = 0, 0  # length of the union of the job spans
+    for t0, t1 in sorted((j["submissionTime"], j["completionTime"]) for j in done):
+        busy_ms, end = busy_ms + max(0, t1 - max(t0, end)), max(end, t1)
     return {
         "query": query, "run": run, "wall_s": round(wall, 3),
         "jobs": len(jobs), "stages": len(stages), "tasks": sum(tasks),
@@ -98,7 +99,8 @@ def _record(store: _StatusStore, group: str, query: str, run: int, wall: float) 
         "shuffle_read_bytes": sum(s["shuffleReadBytes"] for s in stages),
         "shuffle_write_bytes": sum(s["shuffleWriteBytes"] for s in stages),
         "spill_bytes": sum(s["memoryBytesSpilled"] + s["diskBytesSpilled"] for s in stages),
-        "driver_gap_s": round(wall - job_ms / 1000, 3),
+        "job_s": [round((j["completionTime"] - j["submissionTime"]) / 1000, 3) for j in done],
+        "driver_gap_s": round(wall - busy_ms / 1000, 3),
         "single_task_stages": [s["stageId"] for s in stages
                                if s["numTasks"] == 1 and s["executorRunTime"] > 1000],
     }
@@ -140,7 +142,6 @@ def _scaled_dir(spark, sf_dir: str, k: int) -> str:
     dest = Path(local) / f"profile_{Path(sf_dir).name}_x{k}"
     if not (dest / "_BUILT").exists():
         from bench import build_scaled_dir
-
         build_scaled_dir(spark, sf_dir, k, str(dest))
         (dest / "_BUILT").touch()
     return str(dest)
@@ -172,28 +173,27 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--runs", type=int, default=3, help="warmed passes after the cold one")
     ap.add_argument("--scale", type=int, default=1, metavar="K", help="profile on a Kx copy")
     ap.add_argument("--plans", type=Path, metavar="DIR", help="write explain plans here")
-    ap.add_argument("--out", type=Path, metavar="FILE", help="append here (default stdout)")
     ap.add_argument("--compare", nargs=2, metavar=("A", "B"), help="compare two outputs")
     args = ap.parse_args(argv)
     unknown = sorted(set(args.names) - REGISTRY.keys())
     if not args.compare and (unknown or not args.names):
         ap.error(f"not REGISTRY queries: {unknown}" if unknown else "name a query")
-    with open(args.out, "a") if args.out else contextlib.nullcontext(sys.stdout) as out:
-        def emit(records: list[dict]) -> None:
-            for r in records:
-                print(json.dumps(r), file=out, flush=True)
 
-        if args.compare:
-            return emit(compare(*args.compare))
-        spark = get_spark(app_name="profile")
-        data = _scaled_dir(spark, args.sf_dir, args.scale) if args.scale > 1 else args.sf_dir
-        engine = Path(sys.modules["pyspark_cdc_engine"].__file__).parent
-        commit = subprocess.run(["git", "-C", engine, "rev-parse", "HEAD"],
-                                capture_output=True, text=True).stdout.strip() or None
-        emit([{"cores": spark.sparkContext.defaultParallelism, "sf_dir": args.sf_dir,
-               "scale": args.scale, "commit": commit}])
-        for name in args.names:  # each query's lines as soon as it is done
-            emit(profile_queries(spark, [name], data, args.runs, args.plans))
+    def emit(records: list[dict]) -> None:
+        for r in records:
+            print(json.dumps(r), flush=True)
+
+    if args.compare:
+        return emit(compare(*args.compare))
+    spark = get_spark(app_name="profile")
+    data = _scaled_dir(spark, args.sf_dir, args.scale) if args.scale > 1 else args.sf_dir
+    engine = Path(sys.modules["pyspark_cdc_engine"].__file__).parent
+    commit = subprocess.run(["git", "-C", engine, "rev-parse", "HEAD"],
+                            capture_output=True, text=True).stdout.strip() or None
+    emit([{"cores": spark.sparkContext.defaultParallelism, "sf_dir": args.sf_dir,
+           "scale": args.scale, "commit": commit}])
+    for name in args.names:  # each query's lines as soon as it is done
+        emit(profile_queries(spark, [name], data, args.runs, args.plans))
 
 
 if __name__ == "__main__":

@@ -186,6 +186,9 @@ def test_materialize_async_cancel_stops_its_job(spark):
     while not running():
         assert time.monotonic() < deadline, "async job never started"
         time.sleep(0.1)
+    # the caller's description stays on the async job
+    job = sc._jsc.sc().statusStore().job(running()[0])
+    assert job.description().get() == "async cancel test"
     handle.cancel()
     deadline = time.monotonic() + 5
     while running():

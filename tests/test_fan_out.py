@@ -10,6 +10,7 @@ from types import SimpleNamespace
 
 import pytest
 from py4j.protocol import Py4JError
+from pyspark.errors.exceptions.captured import IllegalArgumentException
 from pyspark.sql import functions as F
 
 from pyspark_cdc_engine.config import get_config
@@ -113,15 +114,22 @@ def test_fan_out_raises_on_bad_floor_setting(spark, monkeypatch):
         fan_out(spark.read.parquet(SF01_EMB))
 
 
-def test_fan_out_logs_introspection_failure(spark, caplog):
+@pytest.mark.parametrize("error", [
+    lambda: Py4JError("no plan"),
+    # the session's exception handler converts JVM errors of raw _jdf calls
+    lambda: IllegalArgumentException(desc="no plan", stackTrace="at x\nat y"),
+], ids=["py4j", "captured"])
+def test_fan_out_logs_introspection_failure(spark, caplog, error):
+    exc = error()  # a CapturedException needs the live JVM
+
     class _Jdf:
         def queryExecution(self):
-            raise Py4JError("no plan")
+            raise exc
 
     df = SimpleNamespace(sparkSession=spark, _jdf=_Jdf())
     assert fan_out(df) is df
     assert _decisions(caplog) == [
-        "fan_out skipped: introspection failed: Py4JError: no plan"
+        f"fan_out skipped: introspection failed: {type(exc).__name__}: no plan"
     ]
 
 

@@ -21,7 +21,8 @@ _spec.loader.exec_module(prof)
 FIELDS = {
     "query", "run", "wall_s", "jobs", "stages", "tasks",
     "max_tasks_per_stage", "min_tasks_per_stage", "shuffle_read_bytes",
-    "shuffle_write_bytes", "spill_bytes", "driver_gap_s", "single_task_stages",
+    "shuffle_write_bytes", "spill_bytes", "job_s", "driver_gap_s",
+    "single_task_stages",
 }
 
 
@@ -39,6 +40,7 @@ def test_profile_queries_records_and_plans(spark, tmp_path):
         assert r["jobs"] >= 1
         assert r["tasks"] >= r["stages"] >= 1
         assert r["max_tasks_per_stage"] >= r["min_tasks_per_stage"] >= 1
+        assert len(r["job_s"]) == r["jobs"]
     assert os.listdir(tmp_path) == ["plans"]
     assert os.listdir(tmp_path / "plans") == ["pricing_summary.txt"]
     assert "Physical Plan" in (tmp_path / "plans" / "pricing_summary.txt").read_text()
@@ -68,14 +70,20 @@ def _stage(sid, status, tasks, run_ms, spill=0):
 def test_record_counts_the_groups_complete_stage_attempts():
     g = "profile-x:q#1"
     store = _FakeStore(
-        jobs=[
-            {"jobGroup": g, "stageIds": [0, 1], "submissionTime": 0, "completionTime": 1500},
-            # a materialize_async job nests under the caller's group
-            {"jobGroup": g + "/materialize_async-1", "stageIds": [2],
-             "submissionTime": 100, "completionTime": 600},
-            {"jobGroup": g + "0", "stageIds": [3], "submissionTime": 0, "completionTime": 9000},
-            {"jobGroup": None, "stageIds": [3], "submissionTime": 0, "completionTime": 9000},
-            {"stageIds": [3], "submissionTime": 0, "completionTime": 9000},
+        jobs=[  # newest first, as the status store lists them
+            {"jobId": 7, "jobGroup": g, "stageIds": [], "submissionTime": 1700,
+             "completionTime": 2000},
+            # a materialize_async job nests under the caller's group; its
+            # span overlaps job 5's, and the gap counts the overlap once
+            {"jobId": 6, "jobGroup": g + "/materialize_async-1", "stageIds": [2],
+             "submissionTime": 1000, "completionTime": 1600},
+            {"jobId": 5, "jobGroup": g, "stageIds": [0, 1], "submissionTime": 0,
+             "completionTime": 1500},
+            {"jobId": 4, "jobGroup": g + "0", "stageIds": [3], "submissionTime": 0,
+             "completionTime": 9000},
+            {"jobId": 3, "jobGroup": None, "stageIds": [3], "submissionTime": 0,
+             "completionTime": 9000},
+            {"jobId": 2, "stageIds": [3], "submissionTime": 0, "completionTime": 9000},
         ],
         stages={
             0: [_stage(0, "FAILED", 4, 0), _stage(0, "COMPLETE", 4, 3000, spill=5)],
@@ -85,10 +93,10 @@ def test_record_counts_the_groups_complete_stage_attempts():
     )
     r = prof._record(store, g, "q", 1, wall=3.0)
     assert r == {
-        "query": "q", "run": 1, "wall_s": 3.0, "jobs": 2, "stages": 2,
+        "query": "q", "run": 1, "wall_s": 3.0, "jobs": 3, "stages": 2,
         "tasks": 5, "max_tasks_per_stage": 4, "min_tasks_per_stage": 1,
         "shuffle_read_bytes": 50, "shuffle_write_bytes": 100, "spill_bytes": 10,
-        "driver_gap_s": 1.0, "single_task_stages": [2],
+        "job_s": [1.5, 0.6, 0.3], "driver_gap_s": 1.1, "single_task_stages": [2],
     }
 
 
