@@ -40,12 +40,14 @@ def bench_cdc_pipeline(spark, n_tx: int) -> dict:
     from pyspark_cdc_engine.tables import DeltaliteTable  # noqa: E402
 
     base = Path(tempfile.mkdtemp(prefix="cdc_bench_"))
-    # Stateful-operator partitioning sized to key cardinality rather than the
-    # default 32 — each state partition carries its own RocksDB instance, a
-    # per-partition fixed cost. (Measured locally the dominant first-run cost
-    # is stream-machinery warmup, ~8 s; warm steady state is ~4.2 s / ~3k ev/s
-    # at either setting. At 100 TB the sizing rule still holds: state
-    # partitions ~ O(executor cores), keys >> partitions.)
+    # The stateful operator's partition count is pinned at 8, not left to the
+    # session default (one per local core), so this section's numbers stay
+    # comparable with earlier artifacts and across boxes. Each state partition
+    # carries its own RocksDB instance that pays a load and a commit every
+    # micro-batch, so the count is a per-step fixed cost: on 4 cores, 32 -> 4
+    # partitions cut the state commit time about 7x (BASELINE.md). At 100 TB
+    # the sizing rule still holds: state partitions ~ O(executor cores),
+    # keys >> partitions.
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:

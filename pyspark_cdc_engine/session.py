@@ -3,19 +3,22 @@
 Reference parity: SparkSessionCreator.scala:17-42 (Delta extensions + RocksDB state
 store + Hive toggle). Ours targets plain OSS Spark 4.x: Delta jars are optional (gated),
 RocksDB state store is built in, and every conf is chosen for the 100 TB design point
-(AQE on, skew-join handling, shuffle partitions sized to the cluster, UTC timezone so
-results compare bit-for-bit against the DuckDB oracle).
+(AQE on, skew-join handling, UTC timezone so results compare bit-for-bit against the
+DuckDB oracle). Shuffle partitions default to the core count on a local master and to 32
+anywhere else; a streaming stateful operator keeps the count its checkpoint began with.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
 # Confs that matter at scale. On a real 1000-executor cluster
 # spark.sql.shuffle.partitions should be ~2-3x total cores (or left to AQE coalescing
-# with a high initial number); locally we size to the test box.
+# with a high initial number); the 32 here is for non-local masters, and get_spark
+# gives a local master one partition per core.
 _BASE_CONFS: dict[str, str] = {
     # AQE: runtime re-planning — coalesce post-shuffle partitions, convert
     # sort-merge to broadcast when a side turns out small, split skewed partitions.
@@ -50,7 +53,26 @@ _BASE_CONFS: dict[str, str] = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # 128 MB parquet split targets — keeps task count proportional to data volume.
     "spark.sql.files.maxPartitionBytes": "134217728",
+    # Delete a reliable checkpoint's files once its RDD is garbage-collected;
+    # iterative loops (BPE training, label propagation) cut one per step.
+    "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
 }
+
+# Spark's own local-master forms: local[N], local[*], local[N,F], local[*,F].
+_LOCAL_N = re.compile(r"local\[([0-9]+|\*)(?:\s*,\s*[0-9]+)?\]")
+
+
+def _local_cores(master: str) -> int | None:
+    """Cores a local master runs tasks on, or None for any other master
+    (``local-cluster[...]``, ``yarn``, ``spark://...``)."""
+    if master == "local":
+        return 1
+    m = _LOCAL_N.fullmatch(master)
+    if m is None:
+        return None
+    if m.group(1) == "*":
+        return os.cpu_count() or 1
+    return int(m.group(1))
 
 
 def get_spark(
@@ -94,6 +116,12 @@ def get_spark(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
         )
+        # AQE coalesces batch shuffles but never a stateful streaming
+        # operator's: it runs this many state partitions (a RocksDB load and
+        # commit each, every micro-batch) for the life of its checkpoint.
+        cores = _local_cores(master)
+        if cores is not None:
+            confs["spark.sql.shuffle.partitions"] = str(cores)
     confs.update(cfg.spark_confs())
     if warehouse_dir:
         confs["spark.sql.warehouse.dir"] = warehouse_dir

@@ -23,7 +23,12 @@ Semantics preserved exactly:
 Scale: parallelism is bounded by transaction-key cardinality (the reference
 documents the same, IMPLEMENTATION.md:185-191); the single shuffle is the hash
 exchange on tx_key, and per-key state is a handful of small JSON strings in
-RocksDB — no skew risk beyond pathological single-transaction floods.
+RocksDB — no skew risk beyond pathological single-transaction floods. The
+number of state partitions is ``spark.sql.shuffle.partitions`` at the
+checkpoint's first run, fixed from then on (restored from the offset log, and
+never coalesced by AQE); each partition is one RocksDB instance that pays a
+load and a commit on every micro-batch, data or not, so size it to the cores
+that run the stream (session.get_spark does so for local masters).
 """
 
 from __future__ import annotations

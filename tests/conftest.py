@@ -20,8 +20,7 @@ TABLES = (
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="pytest", master="local[4]",
-                  extra_confs={"spark.sql.shuffle.partitions": "4",
-                               "spark.ui.enabled": "false"})
+                  extra_confs={"spark.ui.enabled": "false"})
     yield s
 
 

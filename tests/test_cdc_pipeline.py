@@ -299,3 +299,67 @@ def test_malformed_cdc_lines_are_dropped_not_fatal(spark, tmp_path):
     q.awaitTermination(120)
     rows = table.read().collect()
     assert len(rows) == 1 and rows[0].orderId == 5.0
+
+
+def _offset_confs(ckpt):
+    """The session confs each micro-batch's offset-log entry records (line 2
+    of ``offsets/<id>``), in batch order; Spark restores them on restart."""
+    import json as _json
+
+    ids = sorted(int(p.name) for p in (ckpt / "offsets").iterdir() if p.name.isdigit())
+    return [_json.loads((ckpt / "offsets" / str(i)).read_text().splitlines()[1])["conf"]
+            for i in ids]
+
+
+def test_state_partitions_default_to_the_session_cores(spark, tmp_path):
+    """The session's shuffle-partition default (one per local core) is what
+    the stream's first micro-batch records, so the stateful operator runs
+    that many state partitions for the life of the checkpoint."""
+    _, base = _run_stream(spark, tmp_path, [insert_tx(1, "p.1", "4001")])
+    conf = _offset_confs(base / "ckpt")[0]
+    assert conf["spark.sql.shuffle.partitions"] == str(
+        spark.sparkContext.defaultParallelism
+    )
+
+
+def test_restart_keeps_the_checkpoints_state_partitions(spark, tmp_path):
+    """A checkpoint begun at another partition count (8 here; deployments
+    whose checkpoints began at the old default of 32) restarts at that count
+    under a session sized differently, and the transaction parked across the
+    restart is emitted once, exactly as a run without the restart emits it."""
+    done = insert_tx(1, "k.1", "4101")
+    parked = TxBuilder("k.2", "4102").order(2, op="U", version=2).item(2, 1, op="U", version=2)
+    base = tmp_path / "restart"
+    table = DeltaliteTable(spark, str(base / "order_stream"))
+
+    def run():
+        q = cdc_to_scd2_stream(spark, str(base / "cdc"), str(base / "meta"),
+                               table, str(base / "ckpt"))
+        q.awaitTermination(120)
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
+        write_fixture_files(base / "cdc", base / "meta", [done, parked],
+                            metadata_for=[done], file_prefix="b0")
+        run()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert prev != "8"
+    first_run_batches = len(_offset_confs(base / "ckpt"))
+    write_fixture_files(base / "cdc", base / "meta", [], metadata_for=[parked],
+                        file_prefix="b1")
+    run()
+
+    confs = _offset_confs(base / "ckpt")
+    assert len(confs) > first_run_batches
+    assert confs[-1]["spark.sql.shuffle.partitions"] == "8"
+    state_parts = {p.name for p in (base / "ckpt" / "state" / "0").iterdir()
+                   if p.name.isdigit()}
+    assert state_parts == {str(i) for i in range(8)}
+    rows = table.read().drop("dwhProcessedTs").collect()
+    assert [r.xid for r in rows].count("k.2") == 1
+
+    once, _ = _run_stream(spark, tmp_path, [done, parked], subdir="once")
+    expected = once.read().drop("dwhProcessedTs").collect()
+    assert sorted(map(repr, rows)) == sorted(map(repr, expected))

@@ -233,6 +233,28 @@ def test_session_factory_accepts_config(spark):
     assert s.conf.get("spark.sql.session.timeZone") == "UTC"
 
 
+def test_local_master_sizes_shuffle_partitions_to_its_cores():
+    """get_spark gives a local master one shuffle partition per core and any
+    other master the base 32. Read off the master string: building a second
+    session would reconfigure the shared one through getOrCreate."""
+    import os
+
+    from pyspark_cdc_engine.session import _BASE_CONFS, _local_cores
+
+    assert _local_cores("local") == 1
+    assert _local_cores("local[3]") == 3
+    assert _local_cores("local[3,2]") == 3
+    assert _local_cores("local[*]") == (os.cpu_count() or 1)
+    for master in ("local-cluster[2,1,1024]", "yarn", "spark://host:7077"):
+        assert _local_cores(master) is None
+    assert _BASE_CONFS["spark.sql.shuffle.partitions"] == "32"
+
+
+def test_session_cleans_reliable_checkpoints(spark):
+    assert spark.sparkContext.getConf().get(
+        "spark.cleaner.referenceTracking.cleanCheckpoints") == "true"
+
+
 def test_materialize_reroutes_when_active_root_is_similar_prefix(
     spark, tmp_path, monkeypatch
 ):
@@ -292,6 +314,8 @@ def test_enable_hive_support_builds_hive_catalog(tmp_path):
             "spark.conf.spark.sql.shuffle.partitions": "4",
         })
         spark = get_spark(app_name="hive-toggle-test", master="local[2]", config=c)
+        # the config's passthrough beats the local[2] core-count default
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
         assert spark.conf.get("spark.sql.catalogImplementation") == "hive", \\
             spark.conf.get("spark.sql.catalogImplementation")
         spark.sql("CREATE TABLE hive_toggle_t (id BIGINT) USING parquet")
