@@ -6,6 +6,8 @@ RocksDB state store is built in, and every conf is chosen for the 100 TB design 
 (AQE on, skew-join handling, UTC timezone so results compare bit-for-bit against the
 DuckDB oracle). Shuffle partitions default to the core count on a local master and to 32
 anywhere else; a streaming stateful operator keeps the count its checkpoint began with.
+These defaults apply only when get_spark creates the session; a reused session keeps
+its settings.
 """
 
 from __future__ import annotations
@@ -93,6 +95,10 @@ def get_spark(
     env > job file > defaults, AppConfig.scala analog). Supplies app name,
     master, warehouse dir, log level, state-store provider, and arbitrary
     ``spark.conf.*`` passthroughs; explicit keyword arguments win over it.
+
+    When a session already exists it is reused: the config's confs,
+    ``warehouse_dir`` and ``extra_confs`` apply to it, the base defaults do
+    not.
     """
     from pyspark_cdc_engine.config import get_config
 
@@ -105,8 +111,13 @@ def get_spark(
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
     builder = SparkSession.builder.appName(app_name).master(master)
-    confs = dict(_BASE_CONFS)
-    if master and master.startswith("local"):
+    # getOrCreate applies every builder conf to a live session, so the
+    # defaults go in only when this call creates the session: a reused one
+    # keeps what its creator pinned or what was set on it at run time.
+    live = SparkSession._instantiatedSession
+    creating = live is None or live._sc._jsc is None
+    confs = dict(_BASE_CONFS) if creating else {}
+    if creating and master.startswith("local"):
         # In local mode the driver JVM IS the executor: every shuffle hash
         # map, cache partition, and localCheckpoint block of all N cores
         # lives in its heap. Spark's 1g default is a scale cliff (the r7

@@ -116,9 +116,14 @@ class MergeClause:
     ``assignments`` maps output column -> SQL expression over ``target.*`` /
     ``source.*`` (string exprs, same contract as Delta's updateExpr/insertExpr —
     ScdType1MergeApp.scala:101-131). ``kind="delete"`` is the
-    whenMatchedDelete analog: a matched row whose first-satisfied clause (in
-    declaration order, shared with updates) is a delete is dropped from the
-    output."""
+    whenMatchedDelete analog: a matched row whose first-fired clause is a
+    delete is dropped from the output.
+
+    First-fired semantics are defined in one place, the merge's clause
+    classifier (:class:`_MergeClassifier`): matched rows take the first
+    update/delete clause in declaration order whose ``condition`` is TRUE,
+    unmatched source rows the first such insert clause; a NULL condition
+    means not fired."""
 
     kind: str  # "update" | "insert" | "delete"
     condition: str | None = None  # SQL over target./source.; None = always
@@ -3150,6 +3155,22 @@ class DeltaliteTable:
                 hi = st.max if hi is None else max(hi, st.max)
         return None if lo is None else (lo, hi)
 
+    def _prune_merge_scan(
+        self, source: DataFrame, prune_on: str | None, commit: dict
+    ) -> tuple[list[str], list[str]]:
+        """(scan, kept) live dirs for a merge: dirs whose ``prune_on`` stats
+        cannot overlap the source's key range are kept unread. The min/max
+        job runs only when there is more than one dir to choose from."""
+        live = list(commit["live"])
+        if prune_on is None or len(live) < 2:
+            return live, []
+        b = source.agg(
+            F.min(prune_on).alias("lo"), F.max(prune_on).alias("hi")
+        ).first()
+        if b.lo is None:
+            return live, []
+        return self._split_by_bounds(commit, {prune_on: (b.lo, b.hi)})
+
     def merge(
         self,
         source: DataFrame,
@@ -3184,13 +3205,13 @@ class DeltaliteTable:
         fires on are TOMBSTONED in place (deletion-vector sidecars) and only
         the update/insert images are appended; no pre-existing file is
         rewritten, completing the DV DML triad (see :meth:`_dv_merge`)."""
-        if self.exists() and self.identity_columns():
-            ident_cols = self.identity_columns().keys()
+        ident_cols = self.identity_columns()
+        if ident_cols:
             if any(c.kind == "insert" for c in clauses):
                 raise ValueError(
                     "MERGE insert clauses are not supported on a table with "
                     "GENERATED ALWAYS AS IDENTITY columns (no allocation path "
-                    "inside the merge cascade) — append the new rows instead"
+                    "inside the merge) — append the new rows instead"
                 )
             # mirror the update() guard: an update-clause assignment must not
             # overwrite a GENERATED ALWAYS AS IDENTITY column either
@@ -3221,27 +3242,7 @@ class DeltaliteTable:
                 return self.latest_version()  # replayed batch: no-op
         base, commit = self._snapshot()
         self._ensure_published(commit)
-        live = list(commit["live"])
-        kept: list[str] = []
-        if prune_on is not None and len(live) > 1:
-            b = source.agg(
-                F.min(prune_on).alias("lo"), F.max(prune_on).alias("hi")
-            ).first()
-            if b.lo is not None:
-                rewrite = []
-                for d in live:
-                    bounds = self._dir_key_bounds(d, prune_on, commit)
-                    try:
-                        disjoint = bounds is not None and (
-                            bounds[1] < b.lo or bounds[0] > b.hi
-                        )
-                    except TypeError:  # cross-type bounds: keep conservative
-                        disjoint = False
-                    if disjoint:
-                        kept.append(d)
-                    else:
-                        rewrite.append(d)
-                live = rewrite
+        live, kept = self._prune_merge_scan(source, prune_on, commit)
         if live:
             target_df = self._read_dirs(
                 [str(self._root / d) for d in live],
@@ -3252,9 +3253,11 @@ class DeltaliteTable:
             )
         else:  # every dir pruned — merge against an empty target
             target_df = self.read(version=base).limit(0)
-        out_cols = target_df.columns
-        merged = merge_dataframes(target_df, source, condition, clauses, out_cols,
-                                  broadcast_source=broadcast_source)
+        classified = _MergeClassifier.build(
+            target_df, source, condition, clauses, target_df.columns,
+            broadcast_source,
+        )
+        merged = classified.rows()
         self._validate(commit.get("constraints", {}), merged)
         rel = self._write_data_dir(
             merged, base + 1,
@@ -3265,11 +3268,9 @@ class DeltaliteTable:
         extra = {"condition": condition, "schema": merged.schema.json()}
         staged = list(rels)
         if commit.get("cdf"):
-            changes = merge_dataframes(
-                target_df, source, condition, clauses, out_cols,
-                broadcast_source=broadcast_source, emit="changes",
+            cdc_rel = self._stage_cdc_dir(
+                classified.changes(), base + 1, self._mapping(commit)
             )
-            cdc_rel = self._stage_cdc_dir(changes, base + 1, self._mapping(commit))
             extra["cdc_dirs"] = [cdc_rel]
             staged.append(cdc_rel)
         if kept:
@@ -3344,8 +3345,8 @@ class DeltaliteTable:
 
         ``prune_on`` only narrows the SCAN here (which dirs can hold matched
         rows) — no dir is ever rewritten either way. Clause semantics are
-        identical to the cow path: one declaration-order cascade over matched
-        clauses, first satisfied wins; images are cast to the LOG schema's
+        identical to the cow path, which shares the one clause classifier
+        (:class:`_MergeClassifier`); images are cast to the LOG schema's
         column types (a widening assignment cannot brick the table — DML
         type safety, same rule as :meth:`update`)."""
         if txn_app is not None and txn_version is not None:
@@ -3355,24 +3356,7 @@ class DeltaliteTable:
         base, commit = self._snapshot()
         self._ensure_published(commit)
         prior = list(commit.get("dv_files") or [])
-        live = list(commit["live"])
-        scan = live
-        if prune_on is not None and len(live) > 1:
-            b = source.agg(
-                F.min(prune_on).alias("lo"), F.max(prune_on).alias("hi")
-            ).first()
-            if b.lo is not None:
-                scan = []
-                for d in live:
-                    bounds = self._dir_key_bounds(d, prune_on, commit)
-                    try:
-                        disjoint = bounds is not None and (
-                            bounds[1] < b.lo or bounds[0] > b.hi
-                        )
-                    except TypeError:
-                        disjoint = False
-                    if not disjoint:
-                        scan.append(d)
+        scan, _ = self._prune_merge_scan(source, prune_on, commit)
         if scan:
             target_df = self._read_dirs(
                 [str(self._root / d) for d in scan],
@@ -3389,100 +3373,16 @@ class DeltaliteTable:
                 .withColumn("__fp", F.lit(None).cast("string"))
                 .withColumn("__ri", F.lit(None).cast("long"))
             )
-        data_cols = [c for c in target_df.columns if c not in ("__fp", "__ri")]
-        t = target_df.select(
-            F.struct(*data_cols).alias("target"), "__fp", "__ri"
-        ).withColumn("__t", F.lit(True))
-        s = source.select(F.struct(*source.columns).alias("source")).withColumn(
-            "__s", F.lit(True)
+        pos_cols = ("__fp", "__ri")
+        data_cols = [c for c in target_df.columns if c not in pos_cols]
+        classified = _MergeClassifier.build(
+            target_df, source, condition, clauses, data_cols, broadcast_source,
+            carry=pos_cols,
         )
-        if broadcast_source:
-            s = F.broadcast(s)
-        # full-outer then drop unmatched target: same join shape as the cow
-        # path (clause expressions resolve identically), but unmatched target
-        # rows — the overwhelming majority at scale — exit the plan before
-        # any downstream work
-        j = t.join(s, F.expr(condition), "full_outer").filter(
-            F.col("__s").isNotNull()
-        )
-
-        matched = F.col("__t").isNotNull() & F.col("__s").isNotNull()
-        unmatched_source = F.col("__t").isNull() & F.col("__s").isNotNull()
-        matched_clauses = [c for c in clauses if c.kind in ("update", "delete")]
-        insert_clauses = [c for c in clauses if c.kind == "insert"]
-
-        def clause_cond(c: MergeClause) -> Column:
-            if c.condition is None:
-                return F.lit(True)
-            return F.coalesce(F.expr(c.condition), F.lit(False))
-
-        update_fires = F.lit(False)
-        delete_fires = F.lit(False)
-        prior_neg = F.lit(True)
-        for c in matched_clauses:
-            fires = matched & prior_neg & clause_cond(c)
-            if c.kind == "delete":
-                delete_fires = delete_fires | fires
-            else:
-                update_fires = update_fires | fires
-            prior_neg = prior_neg & ~clause_cond(c)
-        insert_fires = F.lit(False)
-        for c in insert_clauses:
-            insert_fires = insert_fires | (unmatched_source & clause_cond(c))
-
-        src_cols = set(source.columns)
-
-        def default_insert(col: str) -> str:
-            return f"source.{col}" if col in src_cols else "NULL"
-
-        def update_image_cols() -> list[Column]:
-            out = []
-            for col in data_cols:
-                cascade = None
-                prior_neg = F.lit(True)
-                for c in matched_clauses:
-                    if c.kind == "update":
-                        cond = prior_neg & clause_cond(c)
-                        set_expr = (c.assignments or {}).get(col, f"target.{col}")
-                        cascade = (
-                            F.when(cond, F.expr(set_expr))
-                            if cascade is None
-                            else cascade.when(cond, F.expr(set_expr))
-                        )
-                    prior_neg = prior_neg & ~clause_cond(c)
-                expr = (
-                    cascade.otherwise(F.expr(f"target.{col}"))
-                    if cascade is not None
-                    else F.expr(f"target.{col}")
-                )
-                out.append(
-                    expr.cast(target_df.schema[col].dataType).alias(col)
-                )
-            return out
-
-        def insert_image_cols() -> list[Column]:
-            out = []
-            for col in data_cols:
-                cascade = None
-                prior_neg = F.lit(True)
-                for c in insert_clauses:
-                    cond = prior_neg & clause_cond(c)
-                    ins_expr = (
-                        (c.assignments or {}).get(col, default_insert(col))
-                        if c.assignments
-                        else default_insert(col)
-                    )
-                    cascade = (
-                        F.when(cond, F.expr(ins_expr))
-                        if cascade is None
-                        else cascade.when(cond, F.expr(ins_expr))
-                    )
-                    prior_neg = prior_neg & ~clause_cond(c)
-                expr = cascade if cascade is not None else F.lit(None)
-                out.append(
-                    expr.cast(target_df.schema[col].dataType).alias(col)
-                )
-            return out
+        # unmatched target rows — the overwhelming majority at scale — exit
+        # the plan before any downstream work; every output below reads this
+        # persisted join
+        j = classified.joined = classified.joined.filter("source IS NOT NULL")
 
         extra: dict = {"condition": condition, "dv_merge": True}
         if commit.get("schema"):
@@ -3490,7 +3390,7 @@ class DeltaliteTable:
         if txn_app is not None and txn_version is not None:
             extra["txn"] = {"app": txn_app, "version": txn_version}
 
-        j = j.persist()
+        j.persist()
         try:
             pos = lambda df: df.select(  # noqa: E731
                 F.col("__fp").alias("file_path"), F.col("__ri").alias("row_index")
@@ -3498,23 +3398,25 @@ class DeltaliteTable:
             # one aggregate decides which of the four outputs exist (instead
             # of three isEmpty actions); the writes below each reuse the
             # persisted join
-            flags = j.select(
-                F.max(F.when(delete_fires, 1).otherwise(0)).alias("d"),
-                F.max(F.when(update_fires, 1).otherwise(0)).alias("u"),
-                F.max(F.when(insert_fires, 1).otherwise(0)).alias("i"),
-            ).first()
+            flags = j.selectExpr(*[
+                f"bool_or({classified.fires(k)}) AS {k}"
+                for k in ("delete", "update", "insert")
+            ]).first()
             new_dvs: list[str] = []
-            if flags.d:
-                rel = self._write_dv_sidecar(pos(j.filter(delete_fires)), base + 1)
+            if flags.delete:
+                rel = self._write_dv_sidecar(
+                    pos(j.filter(classified.fires("delete"))), base + 1
+                )
                 new_dvs.append(rel)
                 extra["dv_merge_delete_dvs"] = [rel]
             upd_rels: list[str] = []
-            if flags.u:
-                upd_rows = j.filter(update_fires)
-                rel = self._write_dv_sidecar(pos(upd_rows), base + 1)
+            if flags.update:
+                rel = self._write_dv_sidecar(
+                    pos(j.filter(classified.fires("update"))), base + 1
+                )
                 new_dvs.append(rel)
                 extra["dv_merge_update_dvs"] = [rel]
-                images = upd_rows.select(*update_image_cols())
+                images = classified.images("update")
                 self._validate(commit.get("constraints", {}), images)
                 drel = self._write_data_dir(
                     images, base + 1,
@@ -3523,8 +3425,8 @@ class DeltaliteTable:
                 )
                 upd_rels = self._staged_rels(drel, commit.get("partition_by"))
             ins_rels: list[str] = []
-            if flags.i:
-                images = j.filter(insert_fires).select(*insert_image_cols())
+            if flags.insert:
+                images = classified.images("insert")
                 self._validate(commit.get("constraints", {}), images)
                 drel = self._write_data_dir(
                     images, base + 1,
@@ -3550,6 +3452,177 @@ class DeltaliteTable:
         )
 
 
+def _ident(name: str) -> str:
+    """``name`` as a backquoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+@dataclass
+class _MergeClassifier:
+    """The one MERGE clause classifier, shared by the copy-on-write rows,
+    their change rows and the deletion-vector merge.
+
+    ``joined`` is the full outer join of the target and source rows, each
+    side packed into one struct (``target`` / ``source``) so that
+    ``target.x`` / ``source.x`` in Delta-style string expressions resolve as
+    plain field accesses, plus the ``carry`` columns of the target and
+    ``__clause``: the index into ``clauses`` of the first clause in
+    declaration order whose condition is TRUE. Matched rows test the
+    update/delete conditions, unmatched source rows the insert conditions; a
+    SQL ``CASE`` counts a NULL condition as not fired. A matched row that no
+    clause fires on and an unmatched target row get ``PASS`` (they pass
+    through); an unmatched source row no insert accepts gets NULL.
+
+    ``column_sql`` holds one SQL expression per output column:
+    ``CASE __clause WHEN i THEN <assignment of clause i> ... ELSE
+    target.<col> END``. Each condition and assignment is SQL text parsed
+    once per merge; no Column cascade is built per output column."""
+
+    PASS = -1
+
+    joined: DataFrame
+    clauses: list[MergeClause]
+    out_cols: list[str]
+    column_sql: list[str]
+    target_df: DataFrame
+
+    @classmethod
+    def build(
+        cls,
+        target_df: DataFrame,
+        source: DataFrame,
+        condition: str,
+        clauses: list[MergeClause],
+        out_cols: list[str],
+        broadcast_source: bool = False,
+        carry: tuple[str, ...] = (),
+    ) -> "_MergeClassifier":
+        packed = ", ".join(
+            _ident(c) for c in target_df.columns if c not in carry
+        )
+        t = target_df.selectExpr(
+            f"struct({packed}) AS target", *[_ident(c) for c in carry]
+        )
+        s = source.selectExpr(
+            f"struct({', '.join(_ident(c) for c in source.columns)}) AS source"
+        )
+        if broadcast_source:
+            s = F.broadcast(s)
+
+        def first_fired(kinds: tuple[str, ...], otherwise: str) -> str:
+            whens = " ".join(
+                f"WHEN {'TRUE' if c.condition is None else f'({c.condition})'}"
+                f" THEN {i}"
+                for i, c in enumerate(clauses)
+                if c.kind in kinds
+            )
+            return f"CASE {whens} ELSE {otherwise} END" if whens else otherwise
+
+        clause = (
+            f"CASE WHEN source IS NULL THEN {cls.PASS}"
+            f" WHEN target IS NOT NULL"
+            f" THEN {first_fired(('update', 'delete'), str(cls.PASS))}"
+            f" ELSE {first_fired(('insert',), 'NULL')} END"
+        )
+        joined = t.join(s, F.expr(condition), "full_outer").selectExpr(
+            "*", f"{clause} AS __clause"
+        )
+
+        # An insert clause's unassigned columns (every column, for insertAll)
+        # take the source column of the same name, or NULL when the source
+        # does not carry it (the union operator's typed-null-pad convention).
+        src_cols = set(source.columns)
+        column_sql = []
+        for col in out_cols:
+            whens = []
+            for i, c in enumerate(clauses):
+                assigned = (c.assignments or {}).get(col)
+                if c.kind == "insert" and assigned is None:
+                    assigned = (
+                        f"source.{_ident(col)}" if col in src_cols else "NULL"
+                    )
+                if c.kind in ("update", "insert") and assigned is not None:
+                    whens.append(f"WHEN {i} THEN ({assigned})")
+            passed = f"target.{_ident(col)}"
+            column_sql.append(
+                f"CASE __clause {' '.join(whens)} ELSE {passed} END"
+                if whens else passed
+            )
+        return cls(joined, clauses, out_cols, column_sql, target_df)
+
+    def fires(self, *kinds: str) -> str:
+        """SQL predicate: the row's first-fired clause is of one of ``kinds``."""
+        idx = [str(i) for i, c in enumerate(self.clauses) if c.kind in kinds]
+        return f"__clause IN ({', '.join(idx)})" if idx else "FALSE"
+
+    def rows(self) -> DataFrame:
+        """The merged table: every joined row but the deleted ones and the
+        unmatched source rows no insert clause accepts."""
+        return self.joined.filter(
+            f"__clause IS NOT NULL AND NOT {self.fires('delete')}"
+        ).selectExpr(*[
+            f"{sql} AS {_ident(col)}"
+            for sql, col in zip(self.column_sql, self.out_cols)
+        ])
+
+    def _post_images(self) -> list[str]:
+        return [f"{sql} AS __post{i}" for i, sql in enumerate(self.column_sql)]
+
+    def _cast(self, prefix: str) -> list[Column]:
+        # generated names keep F.col clear of any quoting in the real ones
+        types = {f.name: f.dataType for f in self.target_df.schema.fields}
+        return [
+            F.col(f"{prefix}{i}").cast(types[col]).alias(col)
+            for i, col in enumerate(self.out_cols)
+        ]
+
+    def images(self, *kinds: str) -> DataFrame:
+        """Post-images of the rows whose first-fired clause is of one of
+        ``kinds``, cast to the target's column types."""
+        return (
+            self.joined.filter(self.fires(*kinds))
+            .selectExpr(*self._post_images())
+            .select(*self._cast("__post"))
+        )
+
+    def changes(self) -> DataFrame:
+        """Delta-CDF change rows, tagged in ``__change_type``: a first-fired
+        delete gives a ``delete`` pre-image, an update an
+        ``update_preimage`` + ``update_postimage`` pair, an accepted unmatched
+        source row an ``insert``. Images are cast to the target's column
+        types; one pass over the join."""
+        imgs = (
+            self.joined.filter(self.fires("delete", "update", "insert"))
+            .selectExpr(
+                "__clause",
+                *[
+                    f"target.{_ident(c)} AS __pre{i}"
+                    for i, c in enumerate(self.out_cols)
+                ],
+                *self._post_images(),
+            )
+            .select(
+                "__clause",
+                F.struct(*self._cast("__pre")).alias("__pre"),
+                F.struct(*self._cast("__post")).alias("__post"),
+            )
+        )
+        tagged = ", ".join(
+            f"IF({self.fires(kind)}, named_struct('r', {img}, 't', '{tag}'), NULL)"
+            for kind, img, tag in (
+                ("delete", "__pre", "delete"),
+                ("update", "__pre", "update_preimage"),
+                ("update", "__post", "update_postimage"),
+                ("insert", "__post", "insert"),
+            )
+        )
+        return (
+            imgs.selectExpr(f"explode(array({tagged})) AS c")
+            .filter("c IS NOT NULL")
+            .selectExpr("c.r.*", "c.t AS __change_type")
+        )
+
+
 def merge_dataframes(
     target_df: DataFrame,
     source: DataFrame,
@@ -3559,146 +3632,30 @@ def merge_dataframes(
     broadcast_source: bool = False,
     emit: str = "rows",
 ) -> DataFrame:
-    """Pure-DataFrame MERGE: full-outer join target/source as structs, then apply the
-    ordered clause cascade per output column. Usable standalone (tested against a SQL
-    oracle) and by :meth:`DeltaliteTable.merge`.
+    """Pure-DataFrame MERGE: full-outer join target/source as structs, classify
+    every joined row by its first-fired clause, and project the output columns
+    from that classification. Usable standalone (tested against a SQL oracle)
+    and by :meth:`DeltaliteTable.merge`.
 
-    The struct aliasing trick keeps ``target.x`` / ``source.x`` resolvable as plain
-    Catalyst field accesses, so Delta-style string expressions work verbatim and the
-    whole cascade stays inside whole-stage codegen (no UDFs).
+    First-fired semantics are defined by one classifier
+    (:class:`_MergeClassifier`): the first clause in declaration order whose
+    condition is TRUE wins, and a NULL condition counts as not fired. The
+    whole merge is SQL expressions over ``target.x`` / ``source.x`` field
+    accesses, so it stays inside whole-stage codegen (no UDFs).
 
     ``emit="rows"`` (default) returns the merged table contents.
-    ``emit="changes"`` returns the merge's CHANGE rows instead — the same
-    join + clause cascade classifying every joined row into Delta-CDF kinds
-    (first-fired delete clause → ``delete`` pre-image; first-fired update
-    clause → ``update_preimage`` + ``update_postimage`` pair; accepted
-    unmatched-source row → ``insert``; untouched rows → nothing), tagged in a
-    ``__change_type`` column. Sharing one cascade construction is what keeps
-    the change rows consistent with the committed rewrite by construction —
-    CDF materialization (:meth:`DeltaliteTable.enable_cdf`) depends on it.
+    ``emit="changes"`` returns the merge's CHANGE rows instead — first-fired
+    delete clause → ``delete`` pre-image; first-fired update clause →
+    ``update_preimage`` + ``update_postimage`` pair; accepted unmatched-source
+    row → ``insert``; untouched rows → nothing — tagged in a
+    ``__change_type`` column. Rows and changes read the same classification,
+    which keeps the change rows consistent with the committed rewrite by
+    construction; CDF materialization (:meth:`DeltaliteTable.enable_cdf`)
+    depends on it.
     """
-    t = target_df.select(F.struct(*target_df.columns).alias("target")).withColumn(
-        "__t", F.lit(True)
-    )
-    s = source.select(F.struct(*source.columns).alias("source")).withColumn(
-        "__s", F.lit(True)
-    )
-    if broadcast_source:
-        s = F.broadcast(s)
-    j = t.join(s, F.expr(condition), "full_outer")
-
-    matched = F.col("__t").isNotNull() & F.col("__s").isNotNull()
-    unmatched_source = F.col("__t").isNull() & F.col("__s").isNotNull()
-    unmatched_target = F.col("__t").isNotNull() & F.col("__s").isNull()
-
-    # matched-side clauses (update + delete) share ONE declaration-order
-    # cascade — the first clause whose condition holds wins, exactly Delta's
-    # whenMatchedUpdate/whenMatchedDelete ordering
-    matched_clauses = [c for c in clauses if c.kind in ("update", "delete")]
-    insert_clauses = [c for c in clauses if c.kind == "insert"]
-
-    def clause_cond(c: MergeClause) -> Column:
-        # Delta treats a NULL clause condition as not-fired, same as false.
-        # Without the coalesce a NULL leaks into delete_fires (making the keep
-        # filter NULL → row silently DROPPED, i.e. a null condition *deletes*)
-        # and poisons later clauses' prior_neg gating.
-        if c.condition is None:
-            return F.lit(True)
-        return F.coalesce(F.expr(c.condition), F.lit(False))
-
-    # A matched row is deleted iff the first matched-clause it satisfies is a
-    # delete clause.
-    delete_fires = F.lit(False)
-    prior_neg = F.lit(True)
-    for c in matched_clauses:
-        if c.kind == "delete":
-            delete_fires = delete_fires | (matched & prior_neg & clause_cond(c))
-        prior_neg = prior_neg & ~clause_cond(c)
-
-    # Row keep-filter: target rows survive unless a delete clause fired;
-    # source-only rows survive iff some insert clause accepts them
-    # (whenNotMatched(...).insertAll guard, :130-131).
-    keep = F.col("__t").isNotNull() & ~delete_fires
-    for c in insert_clauses:
-        keep = keep | (unmatched_source & clause_cond(c))
-
-    # Default insert expression: pass the source column through, null-padding
-    # any output column the source does not carry (same typed-null-pad
-    # convention as the union operator) instead of failing resolution.
-    src_cols = set(source.columns)
-
-    def default_insert(col: str) -> str:
-        return f"source.{col}" if col in src_cols else "NULL"
-
-    cascades = []
-    for col in out_cols:
-        expr = F.expr(f"target.{col}")  # default: unmatched target passes through
-        cascade = F.when(unmatched_target, expr)
-        prior_neg = F.lit(True)
-        for c in matched_clauses:
-            if c.kind == "update":
-                cond = matched & prior_neg & clause_cond(c)
-                set_expr = (c.assignments or {}).get(col, f"target.{col}")
-                cascade = cascade.when(cond, F.expr(set_expr))
-            # delete clauses produce no projection (row is filtered), but they
-            # DO consume their slot in the cascade order
-            prior_neg = prior_neg & ~clause_cond(c)
-        # matched but no update clause fired → keep target values
-        cascade = cascade.when(matched, F.expr(f"target.{col}"))
-        prior_neg2 = F.lit(True)
-        for c in insert_clauses:
-            cond = unmatched_source & prior_neg2 & clause_cond(c)
-            ins_expr = (
-                (c.assignments or {}).get(col, default_insert(col))
-                if c.assignments
-                else default_insert(col)
-            )
-            cascade = cascade.when(cond, F.expr(ins_expr))
-            prior_neg2 = prior_neg2 & ~clause_cond(c)
-        cascades.append(cascade)
-
-    if emit == "rows":
-        return j.filter(keep).select(
-            *[c.alias(n) for c, n in zip(cascades, out_cols)]
-        )
-    if emit != "changes":
+    if emit not in ("rows", "changes"):
         raise ValueError(f"emit must be rows|changes, got {emit!r}")
-
-    # First-fired matched clause is an UPDATE (mirror of delete_fires).
-    update_fires = F.lit(False)
-    prior_neg = F.lit(True)
-    for c in matched_clauses:
-        if c.kind == "update":
-            update_fires = update_fires | (matched & prior_neg & clause_cond(c))
-        prior_neg = prior_neg & ~clause_cond(c)
-    insert_fires = F.lit(False)
-    for c in insert_clauses:
-        insert_fires = insert_fires | (unmatched_source & clause_cond(c))
-
-    # Pre/post images as structs cast to the TARGET's column types so the two
-    # struct shapes union exactly inside one array-of-struct generator; one
-    # pass over the join, explode, drop the nulls.
-    tmap = {f.name: f.dataType for f in target_df.schema.fields}
-    pre = F.struct(
-        *[F.expr(f"target.{n}").cast(tmap[n]).alias(n) for n in out_cols]
+    classified = _MergeClassifier.build(
+        target_df, source, condition, clauses, out_cols, broadcast_source
     )
-    post = F.struct(
-        *[c.cast(tmap[n]).alias(n) for c, n in zip(cascades, out_cols)]
-    )
-
-    def tagged(img, fires, tag):
-        return F.when(
-            fires, F.struct(img.alias("r"), F.lit(tag).alias("t"))
-        )
-
-    change = F.array(
-        tagged(pre, delete_fires, "delete"),
-        tagged(pre, update_fires, "update_preimage"),
-        tagged(post, update_fires, "update_postimage"),
-        tagged(post, insert_fires, "insert"),
-    )
-    return (
-        j.select(F.explode(change).alias("c"))
-        .filter(F.col("c").isNotNull())
-        .select("c.r.*", F.col("c.t").alias("__change_type"))
-    )
+    return classified.rows() if emit == "rows" else classified.changes()

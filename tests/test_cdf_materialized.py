@@ -201,22 +201,47 @@ def test_feed_spanning_rename_surfaces_end_names(spark, tmp_path):
     assert dels == [(i, i * 10) for i in range(15, 20)]
 
 
-def test_merge_change_rows_consistent_with_committed_merge(spark, tmp_path):
-    """Property-flavored check over a messier clause cascade: applying the
-    change rows to the pre-merge snapshot reproduces the committed table."""
-    t = _mk(spark, tmp_path / "t")
-    src = spark.createDataFrame(
+# (source rows, clauses, rows the committed table must hold afterwards)
+_CHANGE_ROW_CASES = {
+    "mixed_clauses": (
         [(1, 0), (2, 200), (3, 0), (4, 400), (50, 500), (60, 0)],
-        "id long, v long",
-    )
-    clauses = [
-        MergeClause("update", "source.id % 2 = 0", {"v": "source.v + target.v"}),
-        MergeClause("delete", "source.v = 0"),
-        MergeClause("insert", "source.v > 0", None),
-    ]
+        [
+            MergeClause("update", "source.id % 2 = 0", {"v": "source.v + target.v"}),
+            MergeClause("delete", "source.v = 0"),
+            MergeClause("insert", "source.v > 0", None),
+        ],
+        {},
+    ),
+    # source.v is NULL for matched id=3 and unmatched id=70: the delete
+    # condition is NULL (not fired, so the update fires) and the insert
+    # condition is NULL (not inserted)
+    "null_delete_condition": (
+        [(1, 5), (3, None), (4, 400), (70, None), (80, 800)],
+        [
+            MergeClause("delete", "source.v < target.v"),
+            MergeClause("update", None, {"v": "coalesce(source.v, -1)"}),
+            MergeClause("insert", "source.v > 0", None),
+        ],
+        {3: -1, 4: 400, 80: 800},
+    ),
+}
+
+
+@pytest.mark.parametrize("mode", ["cow", "dv"])
+@pytest.mark.parametrize("case", sorted(_CHANGE_ROW_CASES))
+def test_merge_change_rows_consistent_with_committed_merge(
+    spark, tmp_path, case, mode
+):
+    """Property-flavored check over messier clause sets, on both merge paths:
+    applying the change rows to the pre-merge snapshot reproduces the
+    committed table, NULL clause conditions included."""
+    rows, clauses, expect = _CHANGE_ROW_CASES[case]
+    t = _mk(spark, tmp_path / "t")
+    src = spark.createDataFrame(rows, "id long, v long")
     pre = {r.id: r.v for r in t.read().collect()}
-    v = t.merge(src, "target.id = source.id", clauses)
+    v = t.merge(src, "target.id = source.id", clauses, mode=mode)
     post = {r.id: r.v for r in t.read().collect()}
+    assert {k: post.get(k) for k in expect} == expect
     replayed = dict(pre)
     for r in t.read_changes(v - 1, v).collect():
         if r["_change_type"] == "delete":

@@ -233,6 +233,22 @@ def test_session_factory_accepts_config(spark):
     assert s.conf.get("spark.sql.session.timeZone") == "UTC"
 
 
+def test_get_spark_keeps_a_live_sessions_settings(spark):
+    """A get_spark call that reuses the live session must not put the base
+    defaults back over what was set on it at run time."""
+    from pyspark_cdc_engine.session import get_spark
+
+    key = "spark.sql.shuffle.partitions"
+    orig = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "7")
+        s = get_spark(config=AppConfig(overrides={"spark.log-level": "WARN"}))
+        assert s is spark
+        assert spark.conf.get(key) == "7"
+    finally:
+        spark.conf.set(key, orig)
+
+
 def test_local_master_sizes_shuffle_partitions_to_its_cores():
     """get_spark gives a local master one shuffle partition per core and any
     other master the base 32. Read off the master string: building a second

@@ -56,7 +56,8 @@ def test_null_delete_condition_keeps_row(spark):
 
 def test_null_condition_does_not_poison_cascade(spark):
     """First update clause's condition is NULL for id=2; the second,
-    unconditional update must still fire (prior_neg gating is null-safe)."""
+    unconditional update must still fire (the clause classifier's CASE
+    counts a NULL condition as not fired and moves on)."""
     out = merge_dataframes(
         _tgt(spark),
         _src(spark),
