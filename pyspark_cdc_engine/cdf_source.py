@@ -32,7 +32,7 @@ re-evaluating a SQL predicate:
 - compact / zorder / analyze / schema commits: no logical change, skipped;
 - RESTORE: a logical rewind this executor-side reader cannot enumerate —
   refused loudly (the batch-side ``DeltaliteTable.read_changes`` derives
-  its exact diff, so the jvm data path replicates through restores).
+  its exact diff, so ``replicate_stream`` replicates through restores).
 
 Copy-on-write DELETE/UPDATE/MERGE commits on a CDF-ENABLED table
 (``DeltaliteTable.enable_cdf``, the ``delta.enableChangeDataFeed`` analog)
@@ -508,8 +508,8 @@ class DeltaliteCdfStreamReader(DataSourceStreamReader):
                 raise RuntimeError(
                     f"deltalite_cdf: commit {v} is a RESTORE — its change "
                     f"set cannot be enumerated executor-side. Use the "
-                    f"metadata-only jvm data path "
-                    f"(replicate_stream data_path='jvm', the default) or "
+                    f"metadata-only stream with batch-side reads "
+                    f"(replicate_stream) or "
                     f"restart the consumer from a fresh snapshot past this "
                     f"version."
                 )
@@ -592,7 +592,7 @@ class _MetaSlice(InputPartition):
 class DeltaliteCdfMetaStreamReader(DeltaliteCdfStreamReader):
     """``metadataOnly`` mode: offsets/rate-limiting identical to the full
     reader, but a micro-batch carries ONE ROW PER COMMIT VERSION instead of
-    the change rows. The consumer (``replicate_stream(data_path="jvm")``)
+    the change rows. The consumer (``replicate_stream``)
     derives its version window from the batch and reads the actual change
     data JVM-side via ``DeltaliteTable.read_changes`` — the 100 TB shape:
     Structured Streaming keeps the checkpoint/exactly-once bookkeeping while

@@ -7,16 +7,17 @@ deltalite instead of Delta Lake; the merge goes through
 :func:`pyspark_cdc_engine.tables.DeltaliteTable.merge`, which preserves
 Delta's clause-order semantics.
 
-Scale notes: the consolidation windows and the collect_list both shuffle on
-orderId — Catalyst reuses the single hash exchange. The merge source (one row
-per touched order per micro-batch) is tiny relative to the target, so it is
-broadcast; at 100 TB the remaining cost is the target-side rewrite, which the
-deltalite docstring discusses (file-pruning is the next step).
+Scale notes: consolidation is one groupBy("orderId") aggregate — the batch is
+scanned once and shuffled once, with max_by/collect_list partial-aggregating
+map-side. The merge source (one row per touched order per micro-batch) is
+tiny relative to the target, so it is broadcast; at 100 TB the remaining cost
+is the target-side rewrite, which the deltalite docstring discusses
+(file-pruning is the next step).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark_cdc_engine.functions.arrays import (
@@ -38,11 +39,14 @@ def transform_source_batch(batch_df: DataFrame, handle_deletes: bool = False) ->
     """Nested order_stream rows -> one flat orders_current candidate per orderId.
 
     Multiple rows per orderId in one batch (creation + child-only update) are
-    consolidated: best order row by (version, dwhProcessedTs) desc-nulls-last,
-    best non-null detail by detail version, line items flattened across rows
-    and deduped by lineItemId (transformSourceBatch parity,
-    ScdType1MergeApp.scala:146-206). desc_nulls_last is load-bearing: child-only
-    rows have null order version and must lose the order-field race.
+    consolidated by one groupBy("orderId") aggregate (transformSourceBatch
+    parity, ScdType1MergeApp.scala:146-206): the best order row by
+    max_by(version, dwhProcessedTs) carries the tx context; the best detail
+    by max_by(detail version), skipping rows without one; line items are
+    flattened across rows and deduped by lineItemId (NULL when no row has
+    any). Struct ordering ranks NULL fields lowest — the reference's
+    desc_nulls_last, load-bearing: child-only rows have null order version
+    and must lose the order-field race.
 
     ``handle_deletes``: carry the order-level ``deleted`` tombstone flag on the
     winning row (merge_scd1 turns it into a whenMatchedDelete); parity mode
@@ -53,48 +57,30 @@ def transform_source_batch(batch_df: DataFrame, handle_deletes: bool = False) ->
     safe_order = f"try_element_at({latest_order}, 1)"
     safe_detail = f"try_element_at({latest_detail}, 1)"
 
-    deleted_expr = (
-        ["COALESCE(deleted, false) AS deleted"]
-        if handle_deletes and "deleted" in batch_df.columns
-        else (["false AS deleted"] if handle_deletes else [])
-    )
+    flag = "COALESCE(deleted, false)" if "deleted" in batch_df.columns else "false"
+    deleted = ["deleted"] if handle_deletes else []
     flattened = batch_df.selectExpr(
         "xid", "csn", "dwhProcessedTs", "orderId",
         *[f"{safe_order}.{f} AS {f}" for f in _ORDER_FLAT_FIELDS],
         f"{safe_order}.before AS orderBefore",
         f"{safe_detail} AS orderDetails",
         f"{dedup_array_expr('lineItems', 'lineItemId')} AS lineItems",
-        *deleted_expr,
+        *([f"{flag} AS deleted"] if handle_deletes else []),
     )
-
-    w_order = Window.partitionBy("orderId").orderBy(
-        F.col("version").desc_nulls_last(), F.col("dwhProcessedTs").desc_nulls_last()
-    )
-    best_order_row = (
-        flattened.withColumn("_rn", F.row_number().over(w_order))
-        .filter("_rn = 1")
-        .drop("_rn", "orderDetails", "lineItems")
-    )
-
-    w_detail = Window.partitionBy("orderId").orderBy(
-        F.col("orderDetails.version").desc_nulls_last()
-    )
-    best_details = (
-        flattened.filter("orderDetails IS NOT NULL")
-        .withColumn("_rn", F.row_number().over(w_detail))
-        .filter("_rn = 1")
-        .select("orderId", "orderDetails")
-    )
-
-    merged_items = (
-        flattened.filter("lineItems IS NOT NULL AND size(lineItems) > 0")
-        .groupBy("orderId")
-        .agg(F.flatten(F.collect_list("lineItems")).alias("_all_items"))
-        .selectExpr("orderId", f"{dedup_array_expr('_all_items', 'lineItemId')} AS lineItems")
-    )
-
-    return best_order_row.join(best_details, ["orderId"], "left").join(
-        merged_items, ["orderId"], "left"
+    winner = ["xid", "csn", "dwhProcessedTs", *_ORDER_FLAT_FIELDS, "orderBefore"]
+    return flattened.groupBy("orderId").agg(
+        F.expr(f"max_by(struct({', '.join(winner + deleted)}), "
+               "struct(version, dwhProcessedTs)) AS _w"),
+        F.expr("max_by(orderDetails, IF(orderDetails IS NULL, NULL, "
+               "struct(orderDetails.version))) AS orderDetails"),
+        F.expr("flatten(collect_list(IF(size(lineItems) > 0, lineItems, NULL))) AS _items"),
+    ).selectExpr(
+        "orderId",
+        *[f"_w.{f} AS {f}" for f in winner],
+        # COALESCE keeps `deleted` non-nullable, like the flattened column
+        *(["COALESCE(_w.deleted, false) AS deleted"] if handle_deletes else []),
+        "orderDetails",
+        f"IF(size(_items) = 0, NULL, {dedup_array_expr('_items', 'lineItemId')}) AS lineItems",
     )
 
 

@@ -233,41 +233,35 @@ def replicate_scd2_stream(
     starting_version: int | None = 0,
     maintain: list | None = None,
     max_versions_per_batch: int | None = None,
-    data_path: str = "jvm",
 ):
     """Streaming SCD Type 2 over the change stream: like
-    :func:`replicate_stream` (same ``data_path`` contract), but the
-    destination keeps full key history (see :func:`apply_changes_scd2`)."""
+    :func:`replicate_stream` (change rows read batch-side per version
+    window), but the destination keeps full key history (see
+    :func:`apply_changes_scd2`)."""
     from pyspark_cdc_engine.cdf_source import read_change_stream
     from pyspark_cdc_engine.streaming.pipeline import _refresh_all
 
-    if data_path not in ("jvm", "python"):
-        raise ValueError(f"data_path must be jvm|python, got {data_path!r}")
     dest = DeltaliteTable(spark, dest_path)
     src = DeltaliteTable(spark, source_path)
     txn_app = f"cdc_replicate_scd2:{checkpoint_dir}"
     changes = read_change_stream(
         spark, source_path, starting_version,
         max_versions_per_batch=max_versions_per_batch,
-        metadata_only=data_path == "jvm",
+        metadata_only=True,
     )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if data_path == "jvm":
-            vs = [r["_commit_version"] for r in batch_df.collect()]  # tiny
-            if not vs:
-                return
-            try:
-                # strict: a cow MERGE without CDF in the window raises
-                # instead of silently dropping its changes; the retention
-                # 'change feed unavailable' ValueError propagates too
-                # (failOnDataLoss) — only the benign no-change window is
-                # swallowed
-                batch = src.read_changes(min(vs) - 1, max(vs), strict=True)
-            except NoChangesInWindow:
-                return  # only no-change commits in the window
-        else:
-            batch = batch_df
+        vs = [r["_commit_version"] for r in batch_df.collect()]  # tiny
+        if not vs:
+            return
+        try:
+            # strict: a cow MERGE without CDF in the window raises instead of
+            # silently dropping its changes; the retention 'change feed
+            # unavailable' ValueError propagates too (failOnDataLoss) — only
+            # the benign no-change window is swallowed
+            batch = src.read_changes(min(vs) - 1, max(vs), strict=True)
+        except NoChangesInWindow:
+            return  # only no-change commits in the window
         # Persist the batch AND materialize with count(): the SCD2
         # applier's MERGE runs several jobs and each would otherwise
         # re-execute the full change enumeration — and an isEmpty() probe
@@ -303,31 +297,23 @@ def replicate_stream(
     partition_by: list[str] | None = None,
     maintain: list | None = None,
     max_versions_per_batch: int | None = None,
-    data_path: str = "jvm",
 ):
     """Continuously replicate a deltalite table into another via its change
     stream. Each micro-batch (a window of source commit versions) folds into
     the replica as one idempotent MERGE.
 
-    ``data_path`` picks where the change ROWS travel:
-
-    - ``"jvm"`` (default): the stream carries only commit-version metadata
-      (one tiny row per commit — ``metadata_only`` CDF source); the sink
-      reads the window's change rows batch-side with
-      ``DeltaliteTable.read_changes`` — Spark's vectorized JVM parquet
-      reader, no per-row Python transfer. Structured Streaming still owns
-      offsets/checkpointing, so delivery stays exactly-once; and because
-      the batch-side reader can replay SQL predicates, copy-on-write
-      DELETE/UPDATE WITHOUT materialized CDF replicate here too. Cow MERGE
-      without CDF cannot be enumerated on ANY path — the sink reads in
-      strict mode and fails the stream loudly rather than skipping it
-      (enable_cdf on the source to replicate merges). A window pruned by
-      log retention likewise fails loudly (failOnDataLoss) instead of
-      advancing the checkpoint past lost history.
-    - ``"python"``: change rows flow through the executor-side Python CDF
-      source (the fully stream-native path). DV DML and overwrites
-      replicate exactly; cow rewrites without CDF fail the stream loudly —
-      restart from a fresh snapshot, the Delta `failOnDataLoss` contract.
+    The stream carries only commit-version metadata (one tiny row per
+    commit — ``metadata_only`` CDF source); the sink reads the window's
+    change rows batch-side with ``DeltaliteTable.read_changes`` — Spark's
+    vectorized JVM parquet reader, no per-row Python transfer. Structured
+    Streaming still owns offsets/checkpointing, so delivery stays
+    exactly-once; and because the batch-side reader can replay SQL
+    predicates, copy-on-write DELETE/UPDATE WITHOUT materialized CDF and
+    RESTORE replicate too. Cow MERGE without CDF cannot be enumerated —
+    the sink reads in strict mode and fails the stream loudly rather than
+    skipping it (enable_cdf on the source to replicate merges). A window
+    pruned by log retention likewise fails loudly (failOnDataLoss) instead
+    of advancing the checkpoint past lost history.
 
     ``maintain`` — post-commit maintenance objects (IncrementalLshIndex,
     IncrementalAggregate, …) refreshed after each applied batch, same hook
@@ -337,58 +323,34 @@ def replicate_stream(
     from pyspark_cdc_engine.cdf_source import read_change_stream
     from pyspark_cdc_engine.streaming.pipeline import _refresh_all
 
-    if data_path not in ("jvm", "python"):
-        raise ValueError(f"data_path must be jvm|python, got {data_path!r}")
     dest = DeltaliteTable(spark, dest_path)
     src = DeltaliteTable(spark, source_path)
     txn_app = f"cdc_replicate:{checkpoint_dir}"
     changes = read_change_stream(
         spark, source_path, starting_version,
         max_versions_per_batch=max_versions_per_batch,
-        metadata_only=data_path == "jvm",
+        metadata_only=True,
     )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if data_path == "jvm":
-            vs = [r["_commit_version"] for r in batch_df.collect()]  # tiny
-            if not vs:
-                return
-            try:
-                # strict + narrow catch: see replicate_scd2_stream's sink —
-                # retention refusals and unenumerable cow merges fail the
-                # stream loudly instead of advancing the checkpoint past them
-                batch = src.read_changes(min(vs) - 1, max(vs), strict=True)
-            except NoChangesInWindow:
-                return  # only no-change commits (compact/schema/...) in window
-            # no extra persist/isEmpty pass: the applier persists the net
-            # frame itself, which is what the MERGE's several jobs reuse
-            apply_changes(
-                dest, batch, key_cols,
-                txn_app=txn_app, txn_version=batch_id,
-                prune_on=prune_on, partition_by=partition_by,
-            )
-            _refresh_all(maintain)
+        vs = [r["_commit_version"] for r in batch_df.collect()]  # tiny
+        if not vs:
             return
-        # python data path: persist the batch and materialize with count()
-        # — the applier's MERGE runs several jobs and each would otherwise
-        # re-execute the Python CDF source end to end (isEmpty would cache
-        # only its probed partition; the r12 ingest-sink lesson)
-        batch_df.persist()
         try:
-            if not batch_df.count():
-                return
-            apply_changes(
-                dest,
-                batch_df,
-                key_cols,
-                txn_app=txn_app,
-                txn_version=batch_id,
-                prune_on=prune_on,
-                partition_by=partition_by,
-            )
-            _refresh_all(maintain)
-        finally:
-            batch_df.unpersist()
+            # strict + narrow catch: see replicate_scd2_stream's sink —
+            # retention refusals and unenumerable cow merges fail the
+            # stream loudly instead of advancing the checkpoint past them
+            batch = src.read_changes(min(vs) - 1, max(vs), strict=True)
+        except NoChangesInWindow:
+            return  # only no-change commits (compact/schema/...) in window
+        # no extra persist/isEmpty pass: the applier persists the net
+        # frame itself, which is what the MERGE's several jobs reuse
+        apply_changes(
+            dest, batch, key_cols,
+            txn_app=txn_app, txn_version=batch_id,
+            prune_on=prune_on, partition_by=partition_by,
+        )
+        _refresh_all(maintain)
 
     return (
         changes.writeStream.foreachBatch(sink)

@@ -1623,20 +1623,15 @@ class DeltaliteTable:
     def last_txn_version(self, txn_app: str) -> int | None:
         """Highest txn version committed under ``txn_app``, or None.
 
-        Reads the carried cumulative ``txn_high`` map (Delta's
-        SetTransaction-in-checkpoint analog — survives :meth:`cleanup_log`
-        pruning the commits that recorded the markers), unioned with a raw
-        scan of retained docs so histories whose checkpoints predate the
-        ``txn_high`` protocol still answer exactly."""
-        best = (self._read_commit(self.latest_version()).get("txn_high") or {}).get(
+        Read from the latest snapshot's carried cumulative ``txn_high`` map
+        (Delta's SetTransaction-in-checkpoint analog): replay folds every
+        commit's ``txn`` marker into it, legacy snapshot docs included, and
+        it survives :meth:`cleanup_log` pruning the commits that recorded
+        the markers. No commit doc is re-read, so the cost does not grow
+        with table history."""
+        return (self._read_commit(self.latest_version()).get("txn_high") or {}).get(
             txn_app
         )
-        for v in self._versions():
-            # txn markers are per-commit: raw docs, no state reconstruction
-            txn = self._raw_commit(v).get("txn")
-            if txn and txn.get("app") == txn_app:
-                best = txn["version"] if best is None else max(best, txn["version"])
-        return best
 
     def append(
         self,

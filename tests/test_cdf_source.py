@@ -110,6 +110,23 @@ def test_cdf_stream_refuses_cow_rewrites_loudly(spark, tmp_path):
         raise AssertionError("stream should have failed on the cow commit")
 
 
+def test_cdf_stream_refuses_restore_loudly(spark, tmp_path):
+    """A RESTORE's change set needs prev-state scans the executor-side reader
+    cannot do: draining it fails the stream instead of skipping the rewind
+    (replicate_stream reads it batch-side and converges through it)."""
+    t = _mk(spark, tmp_path / "t", n=4)
+    t.restore(0)  # no-op rewind is still a restore commit
+    q = (
+        read_change_stream(spark, t.path, starting_version=0)
+        .writeStream.foreachBatch(lambda df, bid: df.collect())
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    with pytest.raises(Exception, match="RESTORE"):
+        q.awaitTermination(240)
+
+
 def test_cdf_stream_skips_physical_and_metadata_commits(spark, tmp_path):
     t = _mk(spark, tmp_path / "t")
     t.append(spark.createDataFrame([(50, 5.0)], ["id", "v"]))

@@ -294,6 +294,27 @@ def test_txn_high_survives_cleanup(tmp_path):
     assert t.last_txn_version("ghost") is None
 
 
+def test_last_txn_version_reads_no_commit_docs(tmp_path, monkeypatch):
+    """Every idempotent write asks last_txn_version first: on a warm snapshot
+    it answers from the carried txn_high map, without re-reading any commit
+    doc — its cost must not grow with table history."""
+    t = _table(tmp_path)
+    base, commit = t._snapshot()
+    t._write_commit(
+        "append", ["data/0000000000-deadbeef"],
+        {"schema": "{}", "txn": {"app": "sink", "version": 3}},
+        base, commit,
+    )
+    _append_commits(t, 29, start=1)
+    t._read_commit(t.latest_version())  # warm the snapshot cache
+    reads = []
+    real = txlog.raw_doc
+    monkeypatch.setattr(txlog, "raw_doc", lambda d, v: reads.append(v) or real(d, v))
+    assert t.last_txn_version("sink") == 3
+    assert t.last_txn_version("ghost") is None
+    assert reads == []
+
+
 def test_txn_high_takes_max_and_never_rides_docs(tmp_path):
     t = _table(tmp_path)
     for i, v in enumerate([5, 3, 9]):

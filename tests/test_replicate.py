@@ -348,27 +348,16 @@ def test_replicate_merge_is_file_skipping(spark, tmp_path):
 
 
 def test_jvm_data_path_replicates_cow_without_cdf(spark, tmp_path):
-    """data_path='jvm' (the default) reads change rows batch-side via
-    read_changes, which CAN replay cow predicates — so a cow DELETE/UPDATE
-    history without materialized CDF replicates, where the python
-    executor-side path must refuse."""
+    """replicate_stream reads change rows batch-side via read_changes, which
+    CAN replay cow predicates — so a cow DELETE/UPDATE history without
+    materialized CDF replicates, where the executor-side change stream
+    refuses (test_cdf_stream_refuses_cow_rewrites_loudly)."""
     src = _mk(spark, tmp_path / "src", n=10)          # v0
     src.delete("id >= 8")                             # v1 cow, no CDF
     src.update({"v": "v + 100.0"}, "id < 2")          # v2 cow, no CDF
     _run(spark, src, tmp_path / "dest", tmp_path / "ck")
     dest = DeltaliteTable(spark, str(tmp_path / "dest"))
     assert _snap(dest) == _snap(src)
-
-
-def test_python_data_path_still_refuses_cow_without_cdf(spark, tmp_path):
-    src = _mk(spark, tmp_path / "src", n=6)
-    src.delete("id >= 4")  # cow, no CDF
-    q = replicate_stream(
-        spark, src.path, str(tmp_path / "dest"), ["id"], str(tmp_path / "ck"),
-        data_path="python",
-    )
-    with pytest.raises(Exception, match="copy-on-write"):
-        q.awaitTermination(240)
 
 
 def test_metadata_only_stream_emits_one_row_per_commit(spark, tmp_path):
@@ -480,7 +469,7 @@ def test_read_changes_strict_refuses_cow_merge_without_cdf(spark, tmp_path):
 
 
 def test_jvm_sink_fails_loudly_on_cow_merge_without_cdf(spark, tmp_path):
-    """The jvm data path must not advance the checkpoint past a commit whose
+    """The replication sink must not advance the checkpoint past a commit whose
     changes it cannot enumerate (the r7 sink swallowed every ValueError and
     silently dropped cow-merge changes)."""
     from pyspark_cdc_engine.tables import MergeClause
@@ -567,17 +556,6 @@ def test_jvm_replica_converges_through_restore(spark, tmp_path):
     _run(spark, src, tmp_path / "dest", tmp_path / "ck")
     assert _snap(dest) == _snap(src)
     assert sorted(r.id for r in dest.read().collect()) == [0, 1, 2, 3, 4]
-
-
-def test_python_path_refuses_restore_loudly(spark, tmp_path):
-    src = _mk(spark, tmp_path / "src", n=4)
-    src.restore(0)  # no-op rewind is still a restore commit
-    q = replicate_stream(
-        spark, src.path, str(tmp_path / "dest"), ["id"], str(tmp_path / "ck"),
-        data_path="python",
-    )
-    with pytest.raises(Exception, match="RESTORE"):
-        q.awaitTermination(240)
 
 
 def test_scd2_replica_tracks_history_through_restore(spark, tmp_path):

@@ -3,10 +3,22 @@ SCD_TYPE1_README.md:109-153 worked scenario + FIXTURES.md A3 variants)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
-from pyspark_cdc_engine.scd1 import merge_scd1, scd2_to_scd1_stream, transform_source_batch
-from pyspark_cdc_engine.schemas import ORDER_STREAM_SCHEMA
+from pyspark_cdc_engine.scd1 import (
+    _ORDER_FLAT_FIELDS,
+    merge_scd1,
+    scd2_to_scd1_stream,
+    transform_source_batch,
+)
+from pyspark_cdc_engine.schemas import (
+    DETAIL_STRUCT,
+    LINE_ITEM_STRUCT,
+    ORDER_STREAM_SCHEMA,
+    ORDER_STRUCT,
+)
 from pyspark_cdc_engine.tables import DeltaliteTable
 
 
@@ -82,28 +94,157 @@ def test_golden_readme_scenario(spark, scd1_table):
     assert items[2.0].version == 1.0 and items[2.0].itemQty == 400.0
 
 
-def test_cross_row_consolidation(spark, scd1_table):
-    """Scenario 8: creation + child-only update for one orderId in the SAME
-    batch — naive top-1 dedup would drop the child update
-    (MEDIUM_ARTICLE.md:466-474)."""
-    batch = _stream_rows(spark, [
-        {"xid": "x0", "csn": "c0", "dwhProcessedTs": "t0", "orderId": 9.0,
-         "orders": [_order(9.0, 1.0)],
-         "orderDetails": [{"orderId": 9.0, "version": 1.0, "carrier": "UPS"}],
-         "lineItems": [_item(9.0, 91.0, 1.0, 5.0)]},
-        {"xid": "x0", "csn": "c1", "dwhProcessedTs": "t1", "orderId": 9.0,
-         "orders": [], "orderDetails": [],
-         "lineItems": [_item(9.0, 92.0, 1.0, 7.0), _item(9.0, 91.0, 2.0, 6.0)]},
-    ])
-    t = transform_source_batch(batch).collect()
-    assert len(t) == 1
-    row = t[0]
-    assert row.version == 1.0 and row.orderRef == "ORD-9"  # from the creation row
-    items = {li.lineItemId: li for li in row.lineItems}
-    assert items[91.0].version == 2.0 and items[91.0].itemQty == 6.0  # consolidated
-    assert items[92.0].version == 1.0
-    merge_scd1(spark, batch, scd1_table)
-    assert scd1_table.read().count() == 1
+def _row(xid, csn, ts, oid, orders=None, details=None, items=None, **kw) -> dict:
+    return {"xid": xid, "csn": csn, "dwhProcessedTs": ts, "orderId": oid,
+            "orders": orders, "orderDetails": details, "lineItems": items, **kw}
+
+
+def _candidate(xid, csn, ts, order: dict, detail=None, items=None, **kw) -> dict:
+    """Every column of one consolidated candidate row, for exact comparison."""
+    order = _complete(order, ORDER_STRUCT)
+    return {
+        "orderId": order["orderId"],
+        "xid": xid, "csn": csn, "dwhProcessedTs": ts,
+        **{f: order[f] for f in _ORDER_FLAT_FIELDS},
+        "orderBefore": order["before"],
+        **kw,
+        "orderDetails": None if detail is None else _complete(detail, DETAIL_STRUCT),
+        "lineItems": None if items is None else [_complete(i, LINE_ITEM_STRUCT) for i in items],
+    }
+
+
+# Scenario 8 and the cross-row tie-breaks of transformSourceBatch
+# (ScdType1MergeApp.scala:146-206): (batch rows, handle_deletes, candidates)
+_CONSOLIDATION_CASES = {
+    # creation + child-only update for one orderId in the SAME batch — naive
+    # top-1 dedup would drop the child update (MEDIUM_ARTICLE.md:466-474); the
+    # child-only row has the latest timestamp but no order version, so it
+    # loses the order fields and the tx context
+    "creation_plus_child_update": (
+        [_row("x0", "c0", "t0", 9.0, [_order(9.0, 1.0)],
+              [{"orderId": 9.0, "version": 1.0, "carrier": "UPS"}],
+              [_item(9.0, 91.0, 1.0, 5.0)]),
+         _row("x0", "c1", "t1", 9.0, [], [],
+              items=[_item(9.0, 92.0, 1.0, 7.0), _item(9.0, 91.0, 2.0, 6.0)])],
+        False,
+        [_candidate("x0", "c0", "t0", _order(9.0, 1.0),
+                    {"orderId": 9.0, "version": 1.0, "carrier": "UPS"},
+                    [_item(9.0, 91.0, 2.0, 6.0), _item(9.0, 92.0, 1.0, 7.0)])],
+    ),
+    "newer_version_beats_later_timestamp": (
+        [_row("x1", "c1", "t1", 3.0, [_order(3.0, 2.0, amount=200.0)]),
+         _row("x2", "c2", "t2", 3.0, [_order(3.0, 1.0, amount=100.0)])],
+        False,
+        [_candidate("x1", "c1", "t1", _order(3.0, 2.0, amount=200.0))],
+    ),
+    "equal_versions_later_timestamp_wins": (
+        [_row("x2", "c2", "t2", 4.0, [_order(4.0, 3.0, amount=20.0)]),
+         _row("x1", "c1", "t1", 4.0, [_order(4.0, 3.0, amount=10.0)])],
+        False,
+        [_candidate("x2", "c2", "t2", _order(4.0, 3.0, amount=20.0))],
+    ),
+    "highest_detail_version_wins_null_version_last": (
+        [_row("x1", "c1", "t1", 5.0, [_order(5.0, 1.0)],
+              [{"orderId": 5.0, "version": 2.0, "carrier": "A"}]),
+         _row("x2", "c2", "t2", 5.0,
+              details=[{"orderId": 5.0, "version": 3.0, "carrier": "B"}]),
+         _row("x3", "c3", "t3", 5.0,
+              details=[{"orderId": 5.0, "version": None, "carrier": "C"}]),
+         _row("x4", "c4", "t4", 6.0, [_order(6.0, 1.0)],
+              [{"orderId": 6.0, "version": None, "carrier": "D"}]),
+         _row("x5", "c5", "t5", 6.0,
+              details=[{"orderId": 6.0, "version": 1.0, "carrier": "E"}])],
+        False,
+        [_candidate("x1", "c1", "t1", _order(5.0, 1.0),
+                    {"orderId": 5.0, "version": 3.0, "carrier": "B"}),
+         _candidate("x4", "c4", "t4", _order(6.0, 1.0),
+                    {"orderId": 6.0, "version": 1.0, "carrier": "E"})],
+    ),
+    "no_line_items_in_any_row_is_null": (
+        [_row("x1", "c1", "t1", 7.0, [_order(7.0, 1.0)], items=[]),
+         _row("x2", "c2", "t2", 7.0, [_order(7.0, 2.0)])],
+        False,
+        [_candidate("x2", "c2", "t2", _order(7.0, 2.0))],
+    ),
+    "handle_deletes_carries_the_winners_flag": (
+        [_row("x1", "c1", "t1", 1.0, [_order(1.0, 2.0)], deleted=True),
+         _row("x2", "c2", "t2", 1.0, [_order(1.0, 1.0)], deleted=False),
+         _row("x3", "c3", "t3", 2.0, [_order(2.0, 2.0)], deleted=False),
+         _row("x4", "c4", "t4", 2.0, [_order(2.0, 1.0)], deleted=True)],
+        True,
+        [_candidate("x1", "c1", "t1", _order(1.0, 2.0), deleted=True),
+         _candidate("x3", "c3", "t3", _order(2.0, 2.0), deleted=False)],
+    ),
+}
+
+
+@pytest.mark.parametrize("case", list(_CONSOLIDATION_CASES))
+def test_cross_row_consolidation(spark, scd1_table, case):
+    """Several rows per orderId in one batch consolidate to one candidate:
+    best order row by (version, dwhProcessedTs) desc-nulls-last, best detail
+    by detail version, line items flattened and deduped across rows. Every
+    output column is compared."""
+    specs, handle_deletes, expected = _CONSOLIDATION_CASES[case]
+    batch = _stream_rows(spark, specs)
+    got = {}
+    for r in transform_source_batch(batch, handle_deletes=handle_deletes).collect():
+        d = r.asDict(recursive=True)
+        if d["lineItems"] is not None:
+            d["lineItems"].sort(key=lambda li: li["lineItemId"])
+        got[d["orderId"]] = d
+    assert got == {e["orderId"]: e for e in expected}
+    merge_scd1(spark, batch, scd1_table, handle_deletes=handle_deletes)
+    assert scd1_table.read().count() == sum(not e.get("deleted") for e in expected)
+
+
+_ORDER_COLS = (
+    "orderRef STRING, version DOUBLE, orderDate STRING, orderTs STRING, "
+    "orderStatus STRING, orderType STRING, totalAmount DOUBLE, currency STRING, "
+    "customerId STRING, shippingAddressId STRING, createdTs STRING"
+)
+_DETAIL_COLS = (
+    "orderId DOUBLE, version DOUBLE, shippingMethod STRING, trackingNumber STRING, "
+    "shippedTs STRING, estimatedDeliveryDate STRING, carrier STRING, deliveryStatus STRING"
+)
+_ITEM_COLS = (
+    "lineItemId DOUBLE, orderId DOUBLE, version DOUBLE, productId STRING, itemQty DOUBLE, "
+    "itemPrice DOUBLE, itemAmount DOUBLE, itemCurrency STRING"
+)
+
+
+@pytest.mark.parametrize("handle_deletes", [False, True])
+def test_candidate_schema_is_pinned(spark, handle_deletes):
+    """Bootstrap writes the candidate schema into orders_current, so names,
+    order, types and nullability are part of the contract — `deleted` sits
+    before orderDetails and is never null."""
+    from pyspark.sql.types import DataType
+
+    ddl = (
+        f"orderId DOUBLE, xid STRING, csn STRING, dwhProcessedTs STRING, {_ORDER_COLS}"
+        + f", orderBefore STRUCT<orderId DOUBLE, {_ORDER_COLS}>"
+        + (", deleted BOOLEAN NOT NULL" if handle_deletes else "")
+        + f", orderDetails STRUCT<{_DETAIL_COLS}, before: STRUCT<{_DETAIL_COLS}>>"
+        + f", lineItems ARRAY<STRUCT<{_ITEM_COLS}, before: STRUCT<{_ITEM_COLS}>>>"
+    )
+    empty = spark.createDataFrame([], ORDER_STREAM_SCHEMA)
+    assert transform_source_batch(empty, handle_deletes).schema == DataType.fromDDL(ddl)
+
+
+def test_consolidation_is_one_aggregate(spark, tmp_path):
+    """The batch is scanned once and shuffled once on orderId: one aggregate
+    picks the order row, the detail and the line items together — no window,
+    no join back."""
+    path = str(tmp_path / "batch")
+    specs = [specs for specs, _, _ in _CONSOLIDATION_CASES.values()]
+    _stream_rows(spark, [r for rows in specs for r in rows]).write.parquet(path)
+    out = transform_source_batch(spark.read.parquet(path))
+    assert out.count() == 8
+    # the adaptive plan's final physical plan, once the query has run
+    plan = out._jdf.queryExecution().executedPlan().executedPlan().toString()
+    assert plan.count("Scan parquet") == 1, plan
+    assert len(re.findall(r"\bExchange hashpartitioning", plan)) == 1, plan
+    assert "BroadcastExchange" not in plan and "Window" not in plan, plan
+    assert "Join" not in plan, plan
 
 
 def test_duplicate_replay_is_noop(spark, scd1_table):
